@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..sinks.upsert import upsert_parquet
 from .config import WrfConfig
 from .rfields import build_rfields
-from .wrf_push import push_wrf_grid
+from .wrf_push import persisted_push
 
 
 @dataclass
@@ -58,31 +58,38 @@ def run_wrf_push(
     ``systems``: restrict to these WRF systems — the sequential
     single-system variant (wrf_data_pusher_seq.py) is just this filter,
     which prunes the lake partition when wrf_system is a partition
-    column."""
+    column.
+
+    Both upserts read one cached copy of the frame ``fact`` and ``runs``
+    share (``persisted_push``: decoded, lag-diffed, ``tms_id``-keyed);
+    the first action fills it, and it is released when the push step
+    ends, whether the step succeeds, finds the grid empty or fails."""
     report = RunReport()
     if systems is not None:
         grid = grid.filter(F.col("wrf_system").isin(list(systems)))
     try:
-        fact, runs = push_wrf_grid(grid, cfg, stations=stations)
-        # Partition the fact store by the date prefix of `time`: a pure
-        # function of the (tms_id, time) key, so the partition-scoped
-        # merge is sound — each daily push touches only its own date
-        # directories, untouched dates are never read or rewritten.
-        fact = fact.withColumn("time_date", F.substring("time", 1, 10))
-        n_fact = upsert_parquet(
-            spark, fact, os.path.join(store_dir, "fcst_data"),
-            keys=["tms_id", "time"],
-            partition_cols=["time_date"],
-        )
-        n_runs = upsert_parquet(
-            spark, runs, os.path.join(store_dir, "run"), keys=["tms_id"]
-        )
-        # A4 emptiness guard: the reference aborts with "timeseries is
-        # empty" (wrf_data_pusher.py:200-204) — an empty push is a
-        # failed step, not a silent success
-        if n_fact == 0:
-            report.record("push", False, detail="timeseries is empty")
-            return report
+        with persisted_push(grid, cfg, stations=stations) as (fact, runs):
+            # Partition the fact store by the date prefix of `time`: a
+            # pure function of the (tms_id, time) key, so the
+            # partition-scoped merge is sound — each daily push touches
+            # only its own date directories, untouched dates are never
+            # read or rewritten.
+            fact = fact.withColumn("time_date", F.substring("time", 1, 10))
+            n_fact = upsert_parquet(
+                spark, fact, os.path.join(store_dir, "fcst_data"),
+                keys=["tms_id", "time"],
+                partition_cols=["time_date"],
+            )
+            # A4 emptiness guard: the reference aborts with "timeseries
+            # is empty" (wrf_data_pusher.py:200-204) — an empty push is
+            # a failed step, not a silent success, and it must not
+            # rewrite the run dim to merge zero rows
+            if n_fact == 0:
+                report.record("push", False, detail="timeseries is empty")
+                return report
+            n_runs = upsert_parquet(
+                spark, runs, os.path.join(store_dir, "run"), keys=["tms_id"]
+            )
         report.record("push", True, rows=n_fact, series=n_runs)
     except Exception as exc:
         report.record("push", False, detail=f"{type(exc).__name__}: {exc}")

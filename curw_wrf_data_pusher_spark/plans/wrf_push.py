@@ -12,9 +12,19 @@ The reference's per-row station/tms get-or-create round-trips collapse
 into (a) a broadcast join against the station dim and (b) a pure
 sha256 projection (ids are content-addressed, so no coordination is
 needed to mint them — race-free at any parallelism).
+
+``fact`` and ``runs`` share everything up to the ``tms_id`` projection
+(the ``enriched`` frame).  :func:`push_wrf_grid` stays lazy, so a
+caller that runs one action over one output pays the decode and the
+lag-diff once.  :func:`persisted_push` is the eager form for callers
+that run several actions (every upsert does): it persists the shared
+frame once and releases it when the block exits.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,7 +55,39 @@ def push_wrf_grid(
       value rounded 3 dp — row shape wrf_data_pusher.py:262-268.
     - runs: one row per series — tms_id, sim_tag, station name/coords,
       source, start/end (run table, wrf_data_pusher.py:239-248).
+
+    Both are lazy and each action over them re-runs the decode and the
+    lag-diff; see :func:`persisted_push` for the shared-frame form.
     """
+    return _project(_enrich(grid, cfg, stations), cfg)
+
+
+@contextmanager
+def persisted_push(
+    grid: DataFrame,
+    cfg: WrfConfig,
+    stations: DataFrame | None = None,
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """:func:`push_wrf_grid` with the shared ``enriched`` frame
+    persisted: yields ``(fact, runs)`` read from the cache and
+    unpersists it when the block exits, normally or by an exception.
+
+    The first action fills the cache; every later action (the
+    touched-partition collect, both merge branches, the run-dim merge)
+    reads it instead of re-running the decode, the window lag-diff
+    exchange and the sha256 projection."""
+    enriched = _enrich(grid, cfg, stations).persist()
+    try:
+        yield _project(enriched, cfg)
+    finally:
+        enriched.unpersist()
+
+
+def _enrich(
+    grid: DataFrame, cfg: WrfConfig, stations: DataFrame | None
+) -> DataFrame:
+    """The frame ``fact`` and ``runs`` share: lag-diffed, formatted,
+    keyed by ``tms_id``, narrowed to the columns the two read."""
     # A1: cumulative → per-interval, per grid cell, in time order.
     # The shuffle key (system, y, x) is high-cardinality and uniform —
     # no skew at any scale; AQE coalesces the tiny tail partitions.
@@ -62,7 +104,6 @@ def push_wrf_grid(
     src = source_name(cfg.model, F.col("wrf_system"))
 
     enriched = diffed.select(
-        "wrf_system",
         lat6.alias("lat_s"),
         lon6.alias("lon_s"),
         station_name(F.col("latitude"), F.col("longitude")).alias("station"),
@@ -98,7 +139,13 @@ def push_wrf_grid(
         )
     else:
         enriched = enriched.withColumn("station_id", F.lit(None).cast("long"))
+    return enriched
 
+
+def _project(
+    enriched: DataFrame, cfg: WrfConfig
+) -> tuple[DataFrame, DataFrame]:
+    """``(fact, runs)`` of the shared frame (see :func:`push_wrf_grid`)."""
     fact = enriched.select("tms_id", "time", "fgt", "value")
 
     runs = enriched.groupBy(

@@ -44,6 +44,10 @@ def upsert_parquet(
     rows written (for the unpartitioned full-store form this equals the
     post-merge row count).
 
+    ``new_rows`` is evaluated by several actions (the touched-partition
+    collect and both branches of the merge), so a caller whose lineage
+    is expensive passes a materialised frame.
+
     Two physical forms:
 
     - ``partition_cols`` given (the 100 TB path): the merge touches ONLY

@@ -6,7 +6,7 @@ Streaming mapping:
 - source discovery → file-source stream on the partitioned grid dir
   (replaces the path-probe `is_netcdf_ready.sh` gate);
 - whole-file semantics → ``foreachBatch``: each micro-batch runs the
-  SAME batch plan (push_wrf_grid) and upserts idempotently — late or
+  SAME batch plan (persisted_push) and upserts idempotently — late or
   re-delivered files simply re-upsert with a newer fgt, exactly the
   reference's behavior;
 - "latest" reads stay dedup-on-read (A6) against the store.
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.config import WrfConfig
-from ..plans.wrf_push import push_wrf_grid
+from ..plans.wrf_push import persisted_push
 from ..sources.netcdf import GRID_SCHEMA
 
 
@@ -59,8 +59,8 @@ def stream_wrf_push(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        fact, runs = push_wrf_grid(batch_df, cfg)
-        sink(fact, runs)
+        with persisted_push(batch_df, cfg) as (fact, runs):
+            sink(fact, runs)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -122,16 +122,8 @@ def stream_wrf_nc_push(
             batch_df.select("path", "modificationTime", "content"),
             bbox=bbox,
         )
-        # persist the decoded grid for the batch: the sink consumes
-        # BOTH outputs (fact write + runs-dim upsert, each a separate
-        # action), and without this every action re-runs the byte
-        # decode — measured 3× the decode cost on a full-size d03 push
-        grid = grid.persist()
-        try:
-            fact, runs = push_wrf_grid(grid, cfg)
+        with persisted_push(grid, cfg) as (fact, runs):
             sink(fact, runs)
-        finally:
-            grid.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

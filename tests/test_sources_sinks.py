@@ -103,13 +103,22 @@ def test_archive_and_retention(tmp_path):
     assert new.exists() and not old.exists()
 
 
-def test_runner_end_to_end_and_error_capture(spark, tmp_path):
-    grid = (
+def _fixture_grid(spark):
+    return (
         spark.createDataFrame(make_grid_pdf())
         .withColumn("source_file", F.lit("fixture.nc"))
         .withColumn("fgt_utc", F.lit(FGT_UTC).cast("timestamp"))
         .withColumn("epoch_str", F.lit(EPOCH_STR))
     )
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_runner_end_to_end_and_error_capture(spark, tmp_path):
+    spark.catalog.clearCache()
+    grid = _fixture_grid(spark)
     report = run_wrf_push(
         spark, CFG, grid, str(tmp_path / "store"),
         rfield_dir=str(tmp_path / "rf"),
@@ -119,6 +128,8 @@ def test_runner_end_to_end_and_error_capture(spark, tmp_path):
     assert steps["push"]["rows"] == 2 * 12 * 6 * 5
     assert steps["push"]["series"] == 2 * 6 * 5
     assert steps["rfields"]["files"] == 2 * (2 * 12)  # d03 + kelani
+    # the shared push frame was released once the push step ended
+    assert _cache_is_empty(spark)
 
     # error capture: a grid missing required columns must produce a
     # failed step, not an unhandled exception
@@ -127,15 +138,77 @@ def test_runner_end_to_end_and_error_capture(spark, tmp_path):
     assert not report2.ok
     assert "push" == report2.steps[0]["step"]
     assert report2.steps[0]["detail"]
+    assert _cache_is_empty(spark)
+
+
+def test_runner_decodes_once_per_push(spark, tmp_path):
+    """Both upserts (touched-partition collect, both merge branches,
+    the run-dim merge) read one cached copy of the shared push frame:
+    the grid source is evaluated exactly once per push, on the
+    first-write path and on a merge onto an existing partitioned
+    store alike."""
+    spark.catalog.clearCache()
+    grid = _fixture_grid(spark)
+    n_grid = grid.count()
+    reads = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for batch in batches:
+            reads.add(batch.num_rows)
+            yield batch
+
+    counted = grid.mapInArrow(count_rows, grid.schema)
+    store = str(tmp_path / "store")
+    for push in ("first write", "overlapping merge"):
+        before = reads.value
+        report = run_wrf_push(spark, CFG, counted, store)
+        assert report.ok, (push, report.steps)
+        assert reads.value - before == n_grid, push
+        assert _cache_is_empty(spark), push
+
+    # a decode that fails inside the first upsert's action still
+    # releases the cached frame
+    def broken(batches):
+        for _ in batches:
+            raise ValueError("corrupt slab")
+        yield  # pragma: no cover
+
+    report = run_wrf_push(
+        spark, CFG, grid.mapInArrow(broken, grid.schema), store
+    )
+    assert not report.ok and "corrupt slab" in report.steps[0]["detail"]
+    assert _cache_is_empty(spark)
+
+
+def test_runner_empty_push_leaves_run_dim_untouched(spark, tmp_path):
+    """A4: an empty grid (what the split reader returns for an empty
+    watch dir) is a failed push step, and it must not stage and
+    rename the existing run dim to merge zero rows."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid_split
+
+    store = str(tmp_path / "store")
+    assert run_wrf_push(spark, CFG, _fixture_grid(spark), store).ok
+    run_dir = os.path.join(store, "run")
+
+    def listing():
+        return sorted(
+            (f, os.stat(os.path.join(run_dir, f)).st_mtime_ns)
+            for f in os.listdir(run_dir)
+        )
+
+    before = listing()
+    empty_dir = tmp_path / "watch"
+    empty_dir.mkdir()
+    empty = read_wrf_grid_split(spark, str(empty_dir))
+    assert empty.isEmpty()
+    report = run_wrf_push(spark, CFG, empty, store)
+    assert not report.ok
+    assert report.steps[0]["detail"] == "timeseries is empty"
+    assert listing() == before
 
 
 def test_runner_seq_variant_single_system(spark, tmp_path):
-    grid = (
-        spark.createDataFrame(make_grid_pdf())
-        .withColumn("source_file", F.lit("fixture.nc"))
-        .withColumn("fgt_utc", F.lit(FGT_UTC).cast("timestamp"))
-        .withColumn("epoch_str", F.lit(EPOCH_STR))
-    )
+    grid = _fixture_grid(spark)
     report = run_wrf_push(
         spark, CFG, grid, str(tmp_path / "store"), systems=["A"]
     )
