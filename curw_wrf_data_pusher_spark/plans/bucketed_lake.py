@@ -272,7 +272,12 @@ def build_hybrid_from_stores(
     few dozen gauge stations, and ranking the whole store to feed
     them would be the 100 TB anti-pattern.  Sound because only whole
     tms_id partitions drop, and unmapped series can never reach the
-    output (fcst_long inner-joins through the grid map)."""
+    output (fcst_long inner-joins through the grid map).
+
+    The executed plan scans the fact store once: the forecast side is
+    built once and bounds the obs side through a window over the
+    union, not through a second copy of itself (pinned by
+    tests/test_bucketed_fact.py)."""
     from .hybrid import build_hybrid_rfield
 
     mapped = runs.join(

@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import latest_per_series
@@ -84,25 +84,18 @@ def build_hybrid_rfield(
         .select(
             F.col("obs_station_id").alias("station_id"),
             "longitude", "latitude", "source", "time", "value",
+            F.lit(True).alias("__fcst"),
         )
-    )
-
-    # obs side: series start = min(fcst time) − lead, per station
-    # (gen_active_stations_rfields.py:203-207)
-    start = fcst_long.groupBy("station_id").agg(
-        (F.min("time") - F.expr(f"INTERVAL {obs_lead_minutes} MINUTES"))
-        .alias("obs_start")
     )
     obs_long = (
         active.select(
             F.col("station_id"), "longitude", "latitude", "hash_id"
         )
         .join(obs_data, on="hash_id")
-        .join(F.broadcast(start), on="station_id")
-        .filter(F.col("time") >= F.col("obs_start"))
         .select(
             "station_id", "longitude", "latitude",
             F.lit("obs").alias("source"), "time", "value",
+            F.lit(False).alias("__fcst"),
         )
     )
 
@@ -111,7 +104,22 @@ def build_hybrid_rfield(
     # the mean variant the NaN-skipping avg pools all mapped points per
     # (obs station, time, source) — obs rows (no d03 id) share the same
     # keys so the pivot lines every source up per instant.
-    long_df = fcst_long.unionByName(obs_long)
+    #
+    # Obs series start = min(fcst time) − lead, per station
+    # (gen_active_stations_rfields.py:203-207), as a window over the
+    # union, so the forecast side (A6 window, grid-map join, fact scan)
+    # is built once; an aggregate of fcst_long joined back to the obs
+    # side would build it a second time.  A station with obs rows but
+    # no forecast rows gets a null start, so its obs rows drop out.
+    obs_start = F.min(F.when(F.col("__fcst"), F.col("time"))).over(
+        Window.partitionBy("station_id")
+    ) - F.expr(f"INTERVAL {obs_lead_minutes} MINUTES")
+    long_df = (
+        fcst_long.unionByName(obs_long)
+        .withColumn("__start", obs_start)
+        .filter(F.col("__fcst") | (F.col("time") >= F.col("__start")))
+        .drop("__fcst", "__start")
+    )
     wide = hybrid_wide_frame(
         long_df,
         sources=[*sources, "obs"],

@@ -21,6 +21,7 @@ import glob
 import os
 import shutil
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -73,7 +74,13 @@ def write_rfield_files(
     after the emission job returns; consumers that must never observe
     a partial run gate on it, same contract as Hadoop's marker.  A
     re-run after a failure overwrites the partial files (names are
-    deterministic) and re-publishes the marker."""
+    deterministic) and re-publishes the marker.
+
+    ``df`` is evaluated once: the ``xy.csv`` manifest and the value
+    emission are two actions, so the function persists ``df`` for the
+    call and releases it before returning, on success and on failure
+    alike.  A ``df`` the caller has already cached is read from that
+    cache and left cached."""
     group_cols = group_cols or ["time"]
     os.makedirs(out_dir, exist_ok=True)
     # retract any PREVIOUS run's commit marker before emitting: a
@@ -86,9 +93,6 @@ def write_rfield_files(
 
     # xy.csv once per run — the coordinate manifest (gen_rfields.py:196-202)
     xy = df.select(lon_col, lat_col).dropDuplicates([lon_col, lat_col])
-    write_ordered_csv(
-        xy, os.path.join(out_dir, "xy.csv"), [lon_col, lat_col], header=True
-    )
 
     # EXECUTOR-DIRECT emission (round 10): the earlier form wrote the
     # values through `partitionBy("__t").csv(...)` + a driver-side
@@ -165,14 +169,30 @@ def write_rfield_files(
         close_current()
         yield _pd.DataFrame({"file": names})
 
-    written = sorted(
-        r["file"] for r in data.mapInPandas(emit, "file string").collect()
-    )
+    # a merge-on-read input would otherwise re-scan the store and re-run
+    # its dedup window per action; a caller's cache is left alone, as
+    # unpersisting it would drop it
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        write_ordered_csv(
+            xy, os.path.join(out_dir, "xy.csv"), [lon_col, lat_col],
+            header=True,
+        )
+        written = sorted(
+            r["file"]
+            for r in data.mapInPandas(emit, "file string").collect()
+        )
+    finally:
+        if owned:
+            df.unpersist()
     # job-level commit marker: published atomically AFTER every task's
     # per-file rename has succeeded (the collect() is the barrier) —
     # see the docstring's partial-output contract
     marker_tmp = os.path.join(out_dir, "_SUCCESS.inprogress")
     with open(marker_tmp, "w") as mh:
-        mh.write("\n".join(os.path.basename(p) for p in written) + "\n")
+        # one basename per line: no files → an empty marker, not "\n"
+        mh.write("".join(os.path.basename(p) + "\n" for p in written))
     os.replace(marker_tmp, os.path.join(out_dir, "_SUCCESS"))
     return written

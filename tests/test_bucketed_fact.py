@@ -374,3 +374,54 @@ def test_hybrid_from_stores_matches_raw_frames(spark, tmp_path):
     finally:
         drop_bucketed(spark, ft)
         drop_bucketed(spark, ot)
+
+
+def _fact_scans(plan, table: str) -> int:
+    """FileSourceScanExec nodes reading ``table`` in an executed plan,
+    walking into the AQE final plan, its query stages and subqueries
+    (a reused exchange is not a second scan)."""
+
+    def seq(xs):
+        it = xs.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        kids = [*seq(plan.children()), *seq(plan.subqueries())]
+    own = name == "FileSourceScanExec" and table in plan.nodeName()
+    return own + sum(_fact_scans(k, table) for k in kids)
+
+
+def test_hybrid_from_stores_scans_fact_once(spark, tmp_path):
+    """The forecast side of the store-served hybrid (A6 window, grid-map
+    semi-join, pruned merge-on-read fact scan) runs once: the obs start
+    bound is a window over the union, not a second copy of that side."""
+    from curw_wrf_data_pusher_spark.plans.bucketed_lake import (
+        build_hybrid_from_stores,
+        create_obs_store,
+    )
+
+    fact, runs, obs_station, obs_data, grid_map = _obs_world(spark)
+    ft, ot = "t_scan_fact", "t_scan_obs"
+    try:
+        create_fact_store(
+            spark, fact, ft, num_buckets=4, path=str(tmp_path / "sf"),
+        )
+        create_obs_store(
+            spark, obs_data, ot, num_buckets=4, path=str(tmp_path / "so"),
+        )
+        wide = build_hybrid_from_stores(
+            spark, ft, ot, runs, obs_station, grid_map,
+            sources=["WRF_A", "WRF_C"],
+        )
+        assert wide.collect()
+        plan = wide._jdf.queryExecution().executedPlan()
+        assert _fact_scans(plan, ft) == 1, plan.toString()
+    finally:
+        drop_bucketed(spark, ft)
+        drop_bucketed(spark, ot)

@@ -82,6 +82,21 @@ def test_e2_rfield_files(spark, grid, tmp_path):
     )
 
 
+def test_rfield_empty_run_publishes_empty_marker(spark, tmp_path):
+    """An input with no rows publishes no value files, and its
+    _SUCCESS marker lists none — not one blank name."""
+    from curw_wrf_data_pusher_spark.sinks.rfield_files import (
+        write_rfield_files,
+    )
+
+    empty = spark.createDataFrame(
+        [], "time string, longitude double, latitude double, value double"
+    )
+    assert write_rfield_files(empty, str(tmp_path)) == []
+    with open(os.path.join(tmp_path, "_SUCCESS")) as fh:
+        assert fh.read().splitlines() == []
+
+
 def _hybrid_fixture(spark):
     """Tiny F4-F6-shaped world: 2 obs stations, 2 sources, 4 instants."""
     times = [f"2024-06-01 0{h}:00:00" for h in range(4)]
@@ -186,3 +201,58 @@ def test_e3_csv_outputs(spark, tmp_path):
         full.sort_values(["time", "longitude", "latitude"])
         .reset_index(drop=True)
     )
+
+
+@pytest.mark.parametrize("mean_over_mapped", [False, True])
+def test_e3_obs_lead_window(spark, monkeypatch, mean_over_mapped):
+    """Obs rows reach the pivot only from min(fcst time) − lead on, per
+    station: a reading before that bound is dropped, one exactly at it
+    is kept, and an active station with obs rows but no mapped forecast
+    series contributes none.  The pivot's dropna hides all of them from
+    the wide frame, so the rows are read off the long frame fed to it."""
+    from curw_wrf_data_pusher_spark.plans import hybrid
+
+    fact, runs, obs_station, obs_data, grid_map, times = _hybrid_fixture(spark)
+    # fcst starts at 00:00 for both mapped stations; lead 30 min
+    obs_data = obs_data.unionByName(spark.createDataFrame(
+        [
+            ("h201", "2024-05-31 23:29:00", 5.0),   # before the bound
+            ("h201", "2024-05-31 23:30:00", 6.0),   # exactly at it
+            ("h203", times[0], 30.0),   # active, not in the grid map
+            ("h204", times[0], 40.0),   # mapped to d03 103: no runs
+        ],
+        "hash_id string, time string, value double",
+    ))
+    obs_station = obs_station.unionByName(spark.createDataFrame(
+        [
+            (203, "h203", 80.0, 7.0, "2024-06-01 00:00:00"),
+            (204, "h204", 80.2, 7.2, "2024-06-01 00:00:00"),
+        ],
+        obs_station.schema,
+    ))
+    grid_map = grid_map.unionByName(spark.createDataFrame(
+        [(204, 103, 1)], grid_map.schema
+    ))
+
+    fed = []
+    real = hybrid.hybrid_wide_frame
+
+    def spy(long_df, *args, **kwargs):
+        fed.append(long_df)
+        return real(long_df, *args, **kwargs)
+
+    monkeypatch.setattr(hybrid, "hybrid_wide_frame", spy)
+    wide = hybrid.build_hybrid_rfield(
+        fact, runs, obs_station, obs_data, grid_map,
+        sources=["WRF_A", "WRF_C"], mean_over_mapped=mean_over_mapped,
+        obs_lead_minutes=30,
+    )
+    obs = sorted(
+        (r.station_id, str(r.time))
+        for r in fed[0].filter(F.col("source") == "obs").collect()
+    )
+    assert obs == sorted(
+        [(201, "2024-05-31 23:30:00")]
+        + [(s, t) for s in (201, 202) for t in times]
+    )
+    assert {r.station_id for r in wide.collect()} == {201, 202}

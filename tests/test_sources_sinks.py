@@ -116,6 +116,18 @@ def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _counted(grid, reads):
+    """``grid`` behind an identity ``mapInArrow`` that adds every row it
+    passes to the ``reads`` accumulator."""
+
+    def count_rows(batches):
+        for batch in batches:
+            reads.add(batch.num_rows)
+            yield batch
+
+    return grid.mapInArrow(count_rows, grid.schema)
+
+
 def test_runner_end_to_end_and_error_capture(spark, tmp_path):
     spark.catalog.clearCache()
     grid = _fixture_grid(spark)
@@ -151,13 +163,7 @@ def test_runner_decodes_once_per_push(spark, tmp_path):
     grid = _fixture_grid(spark)
     n_grid = grid.count()
     reads = spark.sparkContext.accumulator(0)
-
-    def count_rows(batches):
-        for batch in batches:
-            reads.add(batch.num_rows)
-            yield batch
-
-    counted = grid.mapInArrow(count_rows, grid.schema)
+    counted = _counted(grid, reads)
     store = str(tmp_path / "store")
     for push in ("first write", "overlapping merge"):
         before = reads.value
@@ -178,6 +184,70 @@ def test_runner_decodes_once_per_push(spark, tmp_path):
     )
     assert not report.ok and "corrupt slab" in report.steps[0]["detail"]
     assert _cache_is_empty(spark)
+
+
+def test_runner_rfields_read_grid_once_per_file_set(spark, tmp_path):
+    """E2 branch: the push reads the grid once, and each of the two
+    ``write_rfield_files`` calls (d03, Kelani) reads it once more —
+    the manifest and the value emission share one evaluation."""
+    spark.catalog.clearCache()
+    grid = _fixture_grid(spark)
+    n_grid = grid.count()
+    reads = spark.sparkContext.accumulator(0)
+    report = run_wrf_push(
+        spark, CFG, _counted(grid, reads), str(tmp_path / "store"),
+        rfield_dir=str(tmp_path / "rf"),
+    )
+    assert report.ok, report.steps
+    assert reads.value == 3 * n_grid
+    assert _cache_is_empty(spark)
+
+
+def test_write_rfield_files_evaluates_input_once(spark, tmp_path):
+    """The xy.csv manifest and the value emission read one cached copy
+    of the input; the cache is released after the call, also when the
+    input fails inside the first action, and a caller's cache is left
+    in place."""
+    from pyspark import StorageLevel
+
+    from curw_wrf_data_pusher_spark.sinks.rfield_files import (
+        write_rfield_files,
+    )
+
+    spark.catalog.clearCache()
+    frame = spark.createDataFrame(
+        [
+            (f"2024-06-01 0{t}:00:00", 80.0 + i / 10, 7.0 + j / 10,
+             float(t * 100 + i * 10 + j))
+            for t in range(3) for i in range(4) for j in range(5)
+        ],
+        "time string, longitude double, latitude double, value double",
+    )
+    reads = spark.sparkContext.accumulator(0)
+    files = write_rfield_files(
+        _counted(frame, reads), str(tmp_path / "rf"),
+    )
+    assert len(files) == 3
+    assert reads.value == frame.count()
+    assert _cache_is_empty(spark)
+
+    def broken(batches):
+        for _ in batches:
+            raise ValueError("corrupt slab")
+        yield  # pragma: no cover
+
+    with pytest.raises(Exception, match="corrupt slab"):
+        write_rfield_files(
+            frame.mapInArrow(broken, frame.schema), str(tmp_path / "bad"),
+        )
+    assert _cache_is_empty(spark)
+
+    mine = frame.persist(StorageLevel.MEMORY_ONLY)
+    try:
+        write_rfield_files(mine, str(tmp_path / "cached"))
+        assert mine.storageLevel == StorageLevel.MEMORY_ONLY
+    finally:
+        mine.unpersist()
 
 
 def test_runner_empty_push_leaves_run_dim_untouched(spark, tmp_path):
