@@ -436,64 +436,13 @@ EXTENDED.append("wrf_s1_ingest_split_d03")
 EXTENDED.append("wrf_s1_ingest_split_d03_hdf5")
 
 
-#: The round-10 driver-recorded core-15 (BENCH_r10.json) — the last
-#: canonical scoreboard before the round-11 drift; per-row ratios vs
-#: this snapshot are emitted in every bench run so regressions carry
-#: their own accounting.
-R10_CANONICAL = {
-    "wrf_e1_push_rows": 0.668, "wrf_e3_hybrid_frame": 0.401,
-    "e2_rfield_contract": 0.875, "wrf_e2_rfield_files": 1.42,
-    "a1_pricing_summary": 0.685, "j3_broadcast_lookup": 0.873,
-    "w3_nearest_neighbor": 0.533, "s10_window_resample": 0.513,
-    "llm_dedup_exact": 0.138, "llm_minhash_lsh_pairs": 0.815,
-    "llm_setsim_pairs": 3.77, "llm_curate_pipeline": 2.359,
-    "llm_pq_topk": 2.809, "llm_pq_index_search": 2.713,
-    "llm_incremental_neardup": 2.094,
-}
-
-#: Calibration microbench values (see _calibration) measured on the
-#: box that produced the round-13 re-pinned canonical scoreboard —
-#: to compare a core-15 total across rounds, first divide each side
-#: by its own calibration row (judge r12 task 2: r12 ran on a ~35%
-#: slower box and the raw totals misled).
-#: Measured 2026-08-16 on the round-13 box alongside a core-15 of
-#: 26.07 s (local run; the same box's r12 spread was 26.6-31.6 s and
-#: its A/B vs the r10/r11 box showed ~35% machine drift).  To compare
-#: core-15 across rounds: ratio = (core_A / cal_A) / (core_B / cal_B)
-#: per calibration axis.
-R13_CALIBRATION: dict[str, float] = {
-    "spark_xxhash64_200m_rows_sec": 0.206,
-    "python_md5_64mib_sec": 0.109,
-}
-
-#: Named causes for understood core-15 deltas (round-11 verdict,
-#: settled round 12).  Everything else >±15% is box/JIT noise: the
-#: round-12 local re-measurement showed the PQ family and dedup
-#: clusters back within 10% of r10 with no code change.
-DELTA_CAUSES = {
-    "llm_setsim_pairs": (
-        "deliberate scale-safety trade: shuffle_hash hints replace an "
-        "AQE/static broadcast that OOMed at 100x (500k docs) — "
-        "SCALING.md round-11 probe; ~+0.7 s purchased"
-    ),
-    "wrf_e2_rfield_files": (
-        "row semantics: the sink re-executes the UNPERSISTED input "
-        "frame for the xy manifest and the value emission (two "
-        "actions; scale-correct two-pass design — a store-backed "
-        "frame column-prunes the second scan).  Sink itself measured "
-        "1.4-1.5 s warm with a materialized input; the round-11 "
-        "_SUCCESS marker costs 3 local FS metadata ops (~0)"
-    ),
-}
-
-
 #: Idle-box best-of-3 minima from the round-13 builder run
-#: (bench_r13.json, same box as R13_CALIBRATION) — the load-pollution
-#: reference (judge r13 task 1): a row whose best-of time exceeds 2x
-#: this value is SUSPECT and is automatically re-run; a row still >2x
-#: after the re-runs is listed in suspect_rows with the loadavg it
-#: saw, and the artifact self-reports publishable=false when that
-#: loadavg was elevated (>= LOAD1_PUBLISH_THRESHOLD).  Rationale for
+#: (bench_r13.json) — the load-pollution reference (judge r13 task
+#: 1): a row whose best-of time exceeds 2x this value is SUSPECT and
+#: is automatically re-run; a row still >2x after the re-runs is
+#: listed in suspect_rows with the loadavg it saw, and the artifact
+#: self-reports publishable=false when that loadavg was elevated
+#: (>= LOAD1_PUBLISH_THRESHOLD).  Rationale for
 #: the threshold: a 1-minute loadavg at or above the core count means
 #: runnable threads exceeded cores for a sustained window — this
 #: process alone cannot hold that with sub-6-second queries, so it is
@@ -605,22 +554,22 @@ def _parse_cpu_per_query(log_dir: str) -> dict[str, float]:
 
 def _calibration(spark) -> dict[str, float]:
     """Fixed machine-speed microbenchmarks, best-of-3 — CONSTANT
-    workloads that never change with engine code, so cross-round
-    ratios can divide machine drift out (judge r12 "What's wrong" #2:
-    the r12 box ran ~35% slower than r10/r11's, making raw core-15
-    totals apples-to-oranges).  Two axes:
-    - spark_xxhash64_200m_rows_sec: 200 M-row JVM-side hash+sum on 32
-      partitions — whole-stage-codegen throughput at bench parallelism;
+    workloads that never change with engine code, so ratios between
+    runs can divide machine drift out.  Two axes:
+    - spark_xxhash64_200m_rows_sec: 200 M-row JVM-side hash+sum on
+      ``defaultParallelism`` partitions — whole-stage-codegen
+      throughput at the session's own parallelism;
     - python_md5_64mib_sec: single-thread CPython md5 over 64 MiB —
       single-core speed (Arrow/driver-side work scales with this)."""
     import hashlib
 
+    n_parts = spark.sparkContext.defaultParallelism
     best_j = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
         # bit_xor, not sum: xxhash64 spans the full long range and a
         # 200M-row SUM overflows BIGINT (hard error under ANSI mode)
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
+        spark.range(0, 200_000_000, 1, n_parts).selectExpr(
             "bit_xor(xxhash64(id)) as s"
         ).write.format("noop").mode("overwrite").save()
         best_j = min(best_j, time.perf_counter() - t0)
@@ -751,15 +700,6 @@ def main() -> None:
     ext_t = {n: round(best[n], 3) for n in EXTENDED}
     core_total = round(sum(core_t.values()), 3)
     ext_total = round(sum(ext_t.values()), 3)
-    # per-row delta vs the round-10 CANONICAL core-15 (the last pinned
-    # pre-drift scoreboard), with named causes for the two rows whose
-    # regression is understood — the round-11 verdict's drift
-    # accounting, carried in the artifact itself.
-    deltas = {
-        n: round(core_t[n] / R10_CANONICAL[n], 2)
-        for n in CORE
-        if sf == "0.1" and n in R10_CANONICAL and R10_CANONICAL[n] > 0
-    }  # the canonical snapshot is sf0.1 — ratios at other SFs mislead
     print(
         json.dumps(
             {
@@ -775,13 +715,7 @@ def main() -> None:
                 "extended_queries": ext_t,
                 "extended_total": ext_total,
                 "grand_total": round(core_total + ext_total, 3),
-                "delta_vs_r10_canonical": deltas,
-                "delta_named_causes": DELTA_CAUSES,
                 "calibration": calibration,
-                # the same microbenches on the box that produced the
-                # re-pinned round-13 canonical numbers: divide by
-                # these to normalize cross-round machine drift
-                "calibration_r13_canonical": R13_CALIBRATION,
                 # load-robustness block (judge r13 task 1): per-row
                 # 1-min loadavg sampled immediately before the rep
                 # that produced each row's best time, the publish

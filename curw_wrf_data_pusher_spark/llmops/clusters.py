@@ -2,7 +2,7 @@
 pairs (the step after LSH/near-dup pair generation — every document in
 a component shares a canonical representative).
 
-Three implementations, one semantics ((doc_id, cluster_id = min id in
+Two implementations, one semantics ((doc_id, cluster_id = min id in
 component)); pick by pair-set size:
 
 - ``connected_components_local`` — single-task union-find over the
@@ -16,81 +16,17 @@ component)); pick by pair-set size:
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SoCC'14): O(log diameter) rounds, fully distributed.  The fallback
   when the pair list itself outgrows a task.
-- ``connected_components`` — min-label propagation, rounds = graph
-  diameter.  Simplest; kept as the semantics oracle for the other two
-  (tests/test_llmops.py asserts three-way agreement).
 
 ``resolve_clusters`` picks local vs star by a pair-count threshold.
-The iterative forms cut lineage with localCheckpoint per round — the
-standard iterative-algorithm pattern on Spark.
+The star rounds cut lineage with localCheckpoint per round — the
+standard iterative-algorithm pattern on Spark.  tests/test_llmops.py
+checks both forms against a plain-Python union-find.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """(id_a, id_b) undirected edges → (doc_id, cluster_id) where
-    cluster_id = min node id in the component.
-
-    Nodes are the ids appearing in any pair; isolated documents are the
-    caller's concern (they are their own cluster by definition)."""
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b"))
-        )
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .dropDuplicates(["node"])
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for it in range(max_iterations):
-        neighbor_min = (
-            edges.join(
-                labels.withColumnRenamed("node", "b"), on="b"
-            )
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, on="node", how="left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        old_labels, labels = labels, new_labels
-        # convergence check is an extra job per round; rounds 0-1 almost
-        # never converge (diameter ≥ 2 whenever any edge exists), so
-        # only start checking from round 2
-        if it >= 2:
-            changed = (
-                labels.alias("n")
-                .join(old_labels.alias("o"), on="node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                break
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

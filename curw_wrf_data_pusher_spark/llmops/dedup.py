@@ -475,9 +475,9 @@ def simhash(
 
 
 def _simhash_widths(radius: int, bits: int) -> tuple[list[int], list[int]]:
-    """Pigeonhole block layout shared by EVERY banding site (the
-    grouped HOF scan, the arrow kernel, the accounting companion) —
-    one definition so the engines cannot desynchronize."""
+    """Pigeonhole block layout shared by the neighbour scan and its
+    accounting companion — one definition so the cap and the drop
+    report cannot desynchronize."""
     blocks = radius + 1
     if blocks > bits:
         raise ValueError(
@@ -488,24 +488,6 @@ def _simhash_widths(radius: int, bits: int) -> tuple[list[int], list[int]]:
     widths = [base + (1 if i < rem else 0) for i in range(blocks)]
     starts = [sum(widths[:i]) for i in range(blocks)]
     return widths, starts
-
-
-#: 16-bit popcount lookup table, built lazily ONCE per worker process
-#: (512 KB — too big to ship inside every task's pickled closure).
-_POPCOUNT16: "object" = None
-
-
-def _popcount16_lut():
-    """int64[65536] popcounts; module-level so closures reference it
-    by name (cloudpickle ships the reference, not the array)."""
-    global _POPCOUNT16
-    if _POPCOUNT16 is None:
-        import numpy as np
-
-        _POPCOUNT16 = np.array(
-            [bin(i).count("1") for i in range(1 << 16)], dtype=np.int64
-        )
-    return _POPCOUNT16
 
 
 def _simhash_block_explode(
@@ -535,28 +517,6 @@ def _simhash_block_explode(
     )
 
 
-def _simhash_block_groups(
-    sig_df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    radius: int,
-    bits: int,
-) -> DataFrame:
-    """Shared pigeonhole block grouping for the banded neighbour search
-    and its drop-accounting companion: (blk, val, ms) where ``ms`` is
-    the sorted (id, sig) member list of one signature-block bucket.
-    One shuffle on (blk, val)."""
-    widths, starts = _simhash_widths(radius, bits)
-    exploded = _simhash_block_explode(sig_df, id_col, sig_col, widths, starts)
-    # sort_array over (id, sig) structs orders by id first, so i < j in
-    # the expansion implies id_a < id_b with no extra filter
-    return exploded.groupBy("blk", "val").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("id"), F.col("sig")))
-        ).alias("ms")
-    )
-
-
 def simhash_dropped_blocks(
     sig_df: DataFrame,
     id_col: str = "doc_id",
@@ -569,132 +529,23 @@ def simhash_dropped_blocks(
     ``simhash_neighbors_banded(max_block_size=N)`` — the signature
     blocks the capped run skipped, as (blk, val, n_members).  Mirrors
     ``lsh_dropped_buckets``: a production dedup job logs the aggregate
-    next to its pair count so capped drops are visible, not silent."""
-    grouped = _simhash_block_groups(sig_df, id_col, sig_col, radius, bits)
-    if max_block_size is None:
-        return grouped.filter(F.lit(False)).select(
-            "blk", "val", F.size("ms").alias("n_members")
-        )
-    return grouped.filter(F.size("ms") > max_block_size).select(
-        "blk", "val", F.size("ms").alias("n_members")
+    next to its pair count so capped drops are visible, not silent.
+
+    Counts the same per-(blk, val) bucket size that
+    ``_simhash_scan_join``'s capped window filters on."""
+    widths, starts = _simhash_widths(radius, bits)
+    counts = (
+        _simhash_block_explode(sig_df, id_col, sig_col, widths, starts)
+        .groupBy("blk", "val")
+        .count()
     )
-
-
-def _simhash_scan_arrow(
-    sig_df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    radius: int,
-    bits: int,
-    widths: list[int],
-    starts: list[int],
-    max_block_size: int | None,
-) -> DataFrame:
-    """Vectorized twin of the in-block neighbour scan — the numpy
-    popcount-matrix kernel behind ``simhash_neighbors_banded(
-    engine="arrow")``.  Same plan shape (one shuffle on (blk, val)),
-    but the Σm² signature comparisons run as chunked m×m xor/popcount
-    matrices instead of interpreted Catalyst lambdas (the
-    ``pq_encode_arrow`` precedent: Python is the kernel, the engine
-    still owns the distribution).  Popcount is exact integer work —
-    a 16-bit lookup table summed over ``ceil(bits/16)`` chunks — so
-    results are bit-identical to the HOF form (pinned by
-    tests/test_llmops.py).
-
-    The first-match exactly-once rule applies only UNCAPPED (see
-    simhash_neighbors_banded: under a cap a pair's first matching
-    block may be the capped one while a later block still matches, so
-    capped runs emit per matching block and dedupe globally — the
-    pre-rewrite contract)."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    n_chunks = math.ceil(bits / 16)
-    use_first_match = max_block_size is None
-    id_type = sig_df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type, False),
-            T.StructField("id_b", id_type, False),
-            T.StructField("hamming", T.LongType(), False),
-        ]
+    capped = (
+        F.lit(False) if max_block_size is None
+        else F.col("count") > max_block_size
     )
-    exploded = _simhash_block_explode(
-        sig_df, id_col, sig_col, widths, starts
+    return counts.filter(capped).select(
+        "blk", "val", F.col("count").alias("n_members")
     )
-    # Pin the group shuffle to the cluster's task parallelism: AQE
-    # coalesces this exchange by BYTES (exploded rows are ~24 B each)
-    # while the per-group work is Σm² popcounts in the Python worker —
-    # at sf0.1 the ~150-group shuffle coalesced to 2 tasks and the
-    # kernel ran near-serially (stage task_time 21 s, executor cpu
-    # 1.8 s: the JVM just waits on Python).  Same key as the groupBy
-    # below, so no extra exchange; explicit repartition counts are
-    # left alone by AQE.  Scale-adaptive: defaultParallelism grows
-    # with the cluster, and at corpus scale each partition holds many
-    # groups so the byte skew stays immaterial.
-    exploded = exploded.repartition(
-        sig_df.sparkSession.sparkContext.defaultParallelism, "blk", "val"
-    )
-
-    def scan(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # module-level lazy LUT: referenced by name, so the 512 KB
-        # table is built once per worker process instead of being
-        # serialized into every task binary with the closure
-        lut = _popcount16_lut()
-        m = len(pdf)
-        empty = pd.DataFrame(
-            {"id_a": pdf["id"][:0], "id_b": pdf["id"][:0],
-             "hamming": np.array([], dtype=np.int64)}
-        )
-        if m < 2 or (max_block_size is not None and m > max_block_size):
-            return empty
-        blk = int(pdf["blk"].iloc[0])
-        ids = pdf["id"].to_numpy()
-        sigs = pdf["sig"].to_numpy().astype(np.uint64)
-        outs = []
-        # row-chunked so a hot block never allocates a full m×m int64
-        # matrix (2464² would be ~50 MB per temp; chunks cap it)
-        step = max(1, (1 << 22) // max(m, 1))
-        for i0 in range(0, m, step):
-            sub = sigs[i0:i0 + step]
-            x = sub[:, None] ^ sigs[None, :]
-            h = lut[(x & np.uint64(0xFFFF)).astype(np.int64)]
-            for t in range(1, n_chunks):
-                h = h + lut[
-                    ((x >> np.uint64(16 * t)) & np.uint64(0xFFFF))
-                    .astype(np.int64)
-                ]
-            mask = (h <= radius) & (
-                ids[i0:i0 + step, None] < ids[None, :]
-            )
-            if use_first_match:
-                # exactly-once rule: every earlier block must differ
-                for b in range(blk):
-                    mask &= (
-                        (x >> np.uint64(starts[b]))
-                        & np.uint64((1 << widths[b]) - 1)
-                    ) != 0
-            i, j = np.nonzero(mask)
-            if len(i):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "id_a": ids[i0:i0 + step][i],
-                            "id_b": ids[j],
-                            "hamming": h[i, j],
-                        }
-                    )
-                )
-        return pd.concat(outs) if outs else empty
-
-    out = exploded.groupBy("blk", "val").applyInPandas(scan, out_schema)
-    if not use_first_match:
-        out = out.dropDuplicates(["id_a", "id_b"])
-    return out
 
 
 def _simhash_first_blk_sql(
@@ -702,7 +553,7 @@ def _simhash_first_blk_sql(
 ) -> str:
     """SQL CASE yielding the smallest block index where the two
     signatures agree, computed from their xor — the exactly-once rule
-    shared by the join and HOF engines."""
+    of the uncapped neighbour scan."""
     return "CASE " + " ".join(
         f"WHEN (shiftrightunsigned({xor_sql}, {starts[b]}) & "
         f"{(1 << widths[b]) - 1}L) = 0L THEN {b}"
@@ -720,29 +571,19 @@ def _simhash_scan_join(
     starts: list[int],
     max_block_size: int | None,
 ) -> DataFrame:
-    """Whole-JVM in-block neighbour scan — the ``engine="join"``
-    production form (round 15, VERDICT r14 item 2): a codegen'd
-    equi-self-join on (blk, val) with the exact verify as a plain
-    ``bit_count(sig_a ^ sig_b) <= radius`` filter expression.  No
-    Python boundary at all: the arrow kernel's JVM↔Arrow transpose,
-    worker round-trip and per-group pandas assembly disappear
-    (guide §4 — prefer built-ins; popcount IS a built-in since 3.3).
-
-    vs the other engines, same Σm² comparisons but each is one
-    xor+popcount inside WholeStageCodegen instead of (arrow) a numpy
-    matrix cell crossing the boundary or (hof) an interpreted Catalyst
-    lambda step.  The join is also the ONLY form AQE skew-handling can
-    split at runtime (guide §2.5 — skewJoin applies to joins, not to
-    groupBy/applyInPandas), so a hot (blk, val) bucket no longer pins
-    one task by construction.
+    """Whole-JVM in-block neighbour scan: a codegen'd equi-self-join
+    on (blk, val) with the exact verify as a plain
+    ``bit_count(sig_a ^ sig_b) <= radius`` filter expression — no
+    Python boundary (popcount is a built-in since Spark 3.3).  Each of
+    the Σm² in-block comparisons is one xor+popcount inside
+    WholeStageCodegen, and a join is the form AQE skew-handling can
+    split at runtime (skewJoin applies to joins, not to groupBy), so a
+    hot (blk, val) bucket does not pin one task.
 
     Exactly-once: uncapped, a pair is kept only in its FIRST matching
-    block (same CASE rule as the HOF engine) — no dedup shuffle;
-    capped runs emit per matching block and dropDuplicates globally
-    (the pre-rewrite contract; see simhash_neighbors_banded).
-
-    Results are bit-identical to both other engines (pinned by
-    tests/test_llmops.py's engine-equality cases)."""
+    block (``_simhash_first_blk_sql``) — no dedup shuffle; capped runs
+    emit per matching block and dropDuplicates globally (see
+    simhash_neighbors_banded)."""
     exploded = _simhash_block_explode(
         sig_df, id_col, sig_col, widths, starts
     )
@@ -791,7 +632,6 @@ def simhash_neighbors_banded(
     radius: int = 6,
     bits: int = 32,
     max_block_size: int | None = None,
-    engine: str = "join",
 ) -> DataFrame:
     """All pairs within hamming distance ``radius`` of each other, via
     pigeonhole banding — the scale path that replaces the O(n²)
@@ -801,35 +641,21 @@ def simhash_neighbors_banded(
     blocks.  A pair within hamming ≤ radius has at most ``radius``
     differing bits across ``radius + 1`` blocks, so by pigeonhole at
     least one block is bit-identical — an equi-match.  Candidates are
-    therefore generated by an exact-block grouping (one shuffle on
-    (block, value)) and verified with the exact ``bit_count(xor)``
-    inside the in-block expansion; results are identical to the
-    broadcast all-pairs form (pinned by tests/test_llmops.py).
-
-    Pair expansion (rewritten round 11 after profiling): explode each
-    block group to ONE ROW PER MEMBER carrying the group's sorted
-    member list, then scan that list with a filter lambda that keeps
-    ``o.id > me.id``, verifies ``bit_count(xor) ≤ radius``, and — the
-    cross-block dedup — keeps a pair only in its FIRST matching block
-    (the smallest block index where the two signatures agree), so
-    every surviving pair materializes exactly once globally and the
-    old ``dropDuplicates`` shuffle disappears.  The earlier form built
-    ALL m² candidate structs of a group as one array value before
-    filtering: with a 32-bit signature and radius 6 the pigeonhole
-    blocks are only 4–5 bits wide (16–32 possible values), so every
-    block value is hot by construction — at sf0.1 (5k docs) the
-    groups reached 2,464 members and the expansion allocated Σm² =
-    32.7M structs inside single rows (~21 s, one task per group).
-    The row-wise scan does the same Σm² short-circuited comparisons
-    as streaming per-member filters (16 s → ~2 s measured) and
-    parallelizes across members, not groups.
+    therefore generated by an equi-self-join on (block, value) and
+    verified with the exact ``bit_count(xor)`` in the join's filter
+    (``_simhash_scan_join``); results are identical to the broadcast
+    all-pairs form (pinned by tests/test_llmops.py).  A pair that
+    agrees in several blocks meets once per such block, so the
+    uncapped scan keeps it only in its FIRST matching block (the
+    smallest block index where the two signatures agree): every pair
+    materializes exactly once and no ``dropDuplicates`` shuffle runs.
 
     Parameter note for the 100 TB regime: pigeonhole banding prunes
     only when ``bits/(radius+1)`` is wide — 32-bit signatures at
     radius 6 make every block value hot and the work is Θ(n²/2^width)
-    per block whatever the engine does.  At corpus scale use 64-bit
-    signatures (width 9) or a tighter radius; the plan shape is
-    already right for those parameters.
+    per block.  At corpus scale use 64-bit signatures (width 9) or a
+    tighter radius; the plan shape is already right for those
+    parameters.
 
     ``max_block_size`` is the same hot-bucket cap as LSH's (identical
     signatures all share every block; a template cluster of 10^5
@@ -839,77 +665,16 @@ def simhash_neighbors_banded(
     rule applies only when ``max_block_size`` is None — under a cap a
     pair's FIRST matching block may be the capped one while a later
     block still matches, so capped runs emit per matching block and
-    dedupe globally (one dropDuplicates shuffle), preserving the
-    pre-rewrite contract: a pair survives capping iff ANY uncapped
-    block matches (pinned by tests/test_llmops.py's cross-block cap
-    recovery case).
-
-    ``engine`` picks the in-block scan implementation: ``"join"``
-    (default since round 15, production — a codegen'd equi-self-join
-    on (blk, val) verifying with a plain ``bit_count(xor)`` filter,
-    zero Python boundary; see ``_simhash_scan_join``), ``"arrow"``
-    (the round-11–14 production form — chunked numpy xor/popcount
-    matrices via ``applyInPandas``) or ``"hof"`` (the Catalyst
-    higher-order-function reference form).  All three are exact
-    integer arithmetic and produce identical pairs (pinned by
-    tests/test_llmops.py); at sf0.1's dense corpus (1.49M true pairs,
-    Σm² = 32.7M comparisons) arrow ran the scan ~4× faster than the
-    interpreted lambdas, and the join form removes arrow's JVM↔worker
-    round-trip on top.
+    dedupe globally (one dropDuplicates shuffle): a pair survives
+    capping iff ANY uncapped block matches (pinned by
+    tests/test_llmops.py's cross-block cap recovery case).
 
     Returns (id_a, id_b, hamming) with id_a < id_b, distinct."""
     widths, starts = _simhash_widths(radius, bits)
-    blocks = radius + 1
-    if engine == "join":
-        return _simhash_scan_join(
-            sig_df, id_col, sig_col, radius, bits, widths, starts,
-            max_block_size,
-        )
-    if engine == "arrow":
-        return _simhash_scan_arrow(
-            sig_df, id_col, sig_col, radius, bits, widths, starts,
-            max_block_size,
-        )
-    grouped = _simhash_block_groups(sig_df, id_col, sig_col, radius, bits)
-    use_first_match = max_block_size is None
-    if max_block_size is not None:
-        grouped = grouped.filter(F.size("ms") <= max_block_size)
-    # first matching block index of a signature pair, from its xor —
-    # the exactly-once rule; applied only UNCAPPED (under a cap the
-    # first matching block may itself be the capped one while a later
-    # block still matches, so capped runs emit per block and dedupe)
-    first_blk = "CASE " + " ".join(
-        f"WHEN (shiftrightunsigned(__x, {starts[b]}) & "
-        f"{(1 << widths[b]) - 1}L) = 0L THEN {b}"
-        for b in range(blocks)
-    ) + " END"
-    first_match_pred = (
-        f" AND {first_blk.replace('__x', '(me.sig ^ o.sig)')} = blk"
-        if use_first_match
-        else ""
+    return _simhash_scan_join(
+        sig_df, id_col, sig_col, radius, bits, widths, starts,
+        max_block_size,
     )
-    match_expr = F.expr(
-        "transform("
-        "  filter(ms, o -> o.id > me.id"
-        f"   AND bit_count(me.sig ^ o.sig) <= {int(radius)}"
-        f"   {first_match_pred}),"
-        "  o -> struct(o.id as id_b,"
-        "              cast(bit_count(me.sig ^ o.sig) as bigint)"
-        "                as hamming))"
-    )
-    out = (
-        grouped.filter(F.size("ms") >= 2)
-        .select("blk", F.explode("ms").alias("me"), "ms")
-        .select(F.col("me.id").alias("id_a"), F.explode(match_expr).alias("p"))
-        .select(
-            "id_a",
-            F.col("p.id_b").alias("id_b"),
-            F.col("p.hamming").alias("hamming"),
-        )
-    )
-    if not use_first_match:
-        out = out.dropDuplicates(["id_a", "id_b"])
-    return out
 
 
 def verify_candidates(

@@ -328,7 +328,6 @@ def pq_topk(
     vec_col: str = "embedding",
     score_scale: int = 9,
     books: list[list[list[float]]] | None = None,
-    encoder: str = "arrow",
 ) -> DataFrame:
     """ADC top-k: exact query vs PQ-compressed corpus.  Returns
     (q_id, n_id, rank, adc) — rank by (adc, n_id), ``adc`` the
@@ -339,18 +338,17 @@ def pq_topk(
     map-only encoded scan, so scoring a pair is m array lookups and
     m−1 additions.
 
-    ``encoder`` picks the corpus-encode implementation: ``"arrow"``
-    (default, production — vectorized numpy ``pq_encode_arrow``) or
-    ``"hof"`` (the Catalyst higher-order-function reference form the
-    SQL oracle mirrors term-for-term).  Both produce identical codes
-    (pinned by tests/test_pq.py); arrow won the sf0.1 A/B by ~4×
-    end-to-end on the llm_pq_topk bench row (numbers in NEXT.md)."""
+    The corpus is encoded by the vectorized ``pq_encode_arrow``;
+    ``pq_encode`` (the higher-order-function form the SQL oracle
+    mirrors term-for-term) produces identical codes and stays as its
+    test reference (tests/test_pq.py)."""
     from ..sources.lake import spread
 
     if books is None:
         books = pq_codebooks(corpus, m, k_sub, id_col, vec_col)
-    enc = pq_encode_arrow if encoder == "arrow" else pq_encode
-    codes = spread(enc(corpus, books, id_col, vec_col, score_scale))
+    codes = spread(
+        pq_encode_arrow(corpus, books, id_col, vec_col, score_scale)
+    )
     return adc_topk_over_codes(
         codes, queries, books, k=k, id_col=id_col, vec_col=vec_col,
         score_scale=score_scale,

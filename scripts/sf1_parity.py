@@ -157,21 +157,30 @@ def main() -> None:
     rnd = int(sys.argv[3]) if len(sys.argv) > 3 else 0
     out_path = sys.argv[4] if len(sys.argv) > 4 else f"PARITY_SF1_r{rnd:02d}.json"
 
+    from curw_wrf_data_pusher_spark.queries import ORACLES, QUERIES
+
+    # a misspelled or unregistered candidate must fail the sweep, not
+    # silently shrink it
+    missing = [n for n in CANDIDATES if n not in QUERIES or n not in ORACLES]
+    if missing:
+        raise SystemExit(
+            f"sf1_parity: candidates without a registered query and "
+            f"oracle: {missing}"
+        )
+
     t0 = time.time()
     build_twin(src, dst)
     build_s = round(time.time() - t0, 1)
     print(f"twin built/cached in {build_s}s at {dst}", file=sys.stderr)
 
-    from curw_wrf_data_pusher_spark.queries import ORACLES, QUERIES
     from curw_wrf_data_pusher_spark.session import get_spark
     from tests.oracle_harness import canonical_hash, duckdb_connection
 
-    names = [n for n in CANDIDATES if n in QUERIES and n in ORACLES]
     spark = get_spark("sf1-parity")
     con = duckdb_connection(dst)
     results = {}
     n_match = 0
-    for name in names:
+    for name in CANDIDATES:
         QUERIES[name](spark, dst).toPandas()  # untimed warm-up
         try:
             load1 = round(os.getloadavg()[0], 2)
@@ -194,14 +203,14 @@ def main() -> None:
     artifact = {
         "sf_equivalent": 1.0, "factor": FACTOR, "src": src,
         "round": rnd, "twin_build_s": build_s,
-        "n_queries": len(names), "n_match": n_match,
+        "n_queries": len(CANDIDATES), "n_match": n_match,
         "results": results,
     }
     with open(out_path, "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps({k: v for k, v in artifact.items()
                       if k != "results"}))
-    sys.exit(0 if n_match == len(names) else 1)
+    sys.exit(0 if n_match == len(CANDIDATES) else 1)
 
 
 if __name__ == "__main__":

@@ -173,15 +173,33 @@ def test_ivf_topk_recall_and_exactness(spark, sf_dir):
     assert set(zip(full.q_id, full.n_id)) == exact_pairs
 
 
+def _union_find_components(edges) -> set[tuple[int, int]]:
+    """Plain-Python union-find reference: (node, component-min) for
+    every node of an undirected edge list."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component's min
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
 def test_cc_three_way_agreement(spark):
-    """Union-find, large-star/small-star, and min-label propagation
-    must produce the identical (doc_id, cluster_id=component-min) map —
-    including on a long chain (min-label's worst case: diameter rounds;
-    star: O(log diameter); union-find: one pass)."""
+    """Array union-find, large-star/small-star and a plain-Python
+    union-find reference must produce the identical (doc_id,
+    cluster_id=component-min) map — including on a long chain (star:
+    O(log diameter) rounds; array union-find: pointer doubling)."""
     import random
 
     from curw_wrf_data_pusher_spark.llmops.clusters import (
-        connected_components,
         connected_components_local,
         connected_components_star,
     )
@@ -194,13 +212,9 @@ def test_cc_three_way_agreement(spark):
     edges += [(rng.randrange(200, 230), rng.randrange(200, 230))
               for _ in range(40)]
     edges += [(500, 501), (1, 0), (3, 2)]
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-    )
-    ml = {
-        (r["doc_id"], r["cluster_id"])
-        for r in connected_components(pairs).collect()
-    }
+    edges = [(a, b) for a, b in edges if a != b]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    ref = _union_find_components(edges)
     st = {
         (r["doc_id"], r["cluster_id"])
         for r in connected_components_star(pairs).collect()
@@ -209,8 +223,8 @@ def test_cc_three_way_agreement(spark):
         (r["doc_id"], r["cluster_id"])
         for r in connected_components_local(pairs).collect()
     }
-    assert st == ml
-    assert uf == ml
+    assert st == ref
+    assert uf == ref
     # chain collapses to one component rooted at 0
     assert all(c == 0 for d, c in st if d < 20)
 
@@ -474,7 +488,8 @@ def test_simhash_banded_equals_broadcast_allpairs(spark, sf_dir):
     """Pigeonhole guarantee: the banded equi-join candidate generation
     plus exact bit_count verify must reproduce the O(n²) broadcast
     inequality self-join EXACTLY (every pair within the radius, their
-    hamming values, nothing else)."""
+    hamming values, each pair once, nothing else) — at radius 3 (8-bit
+    blocks) and radius 6 (4–5-bit blocks)."""
     from curw_wrf_data_pusher_spark.llmops.dedup import (
         simhash_from_text,
         simhash_neighbors_banded,
@@ -483,22 +498,21 @@ def test_simhash_banded_equals_broadcast_allpairs(spark, sf_dir):
     sig = simhash_from_text(
         load_table(spark, sf_dir, "documents").repartition(8)
     ).localCheckpoint()
-    banded = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_neighbors_banded(sig, radius=6).collect()
-    }
     a = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("ha"))
     b = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("hb"))
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long")
-    brute = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+    all_pairs = (
+        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= 6)
-        .collect()
-    }
-    assert banded == brute
-    assert len(banded) > 0  # non-vacuous: sf corpus has near-dups
+    )
+    key = lambda r: (r.id_a, r.id_b, r.hamming)  # noqa: E731
+    for radius in (3, 6):
+        banded = sorted(map(key, simhash_neighbors_banded(
+            sig, radius=radius).collect()))
+        brute = sorted(map(key, all_pairs.filter(
+            F.col("hamming") <= radius).collect()))
+        assert banded == brute, radius
+        assert len(banded) > 0  # non-vacuous: sf corpus has near-dups
 
 
 def test_simhash_banded_radius_validation(spark):
@@ -1497,11 +1511,44 @@ def test_sampled_frames_feed_resize_and_features(spark):
     assert all(r.ok and len(r.feature) == 8 for r in feats)
 
 
-def test_simhash_banded_engines_agree(spark, sf_dir):
-    """The codegen'd bit_count self-join (engine='join', production
-    since round 15), the numpy popcount-matrix kernel (engine='arrow')
-    and the Catalyst HOF scan (engine='hof', reference) emit identical
-    pair sets — same contract as the pq_encode/pq_encode_arrow pair."""
+def _simhash_capped_bruteforce(
+    sigs: dict[int, int], radius: int, bits: int, max_block_size: int
+) -> set[tuple[int, int, int]]:
+    """Brute-force reference for the capped banded search: every
+    i < j pair within ``radius``, kept iff some pigeonhole block where
+    the two signatures agree has at most ``max_block_size`` members."""
+    from collections import Counter
+
+    mask64 = (1 << 64) - 1
+    base, rem = divmod(bits, radius + 1)
+    widths = [base + (1 if i < rem else 0) for i in range(radius + 1)]
+    starts = [sum(widths[:i]) for i in range(radius + 1)]
+
+    def blocks(s: int) -> list[tuple[int, int]]:
+        u = s & mask64
+        return [(b, (u >> starts[b]) & ((1 << widths[b]) - 1))
+                for b in range(radius + 1)]
+
+    by_id = {i: blocks(s) for i, s in sigs.items()}
+    size = Counter(bv for bvs in by_id.values() for bv in bvs)
+    ids = sorted(sigs)
+    out = set()
+    for x, i in enumerate(ids):
+        for j in ids[x + 1:]:
+            ham = ((sigs[i] ^ sigs[j]) & mask64).bit_count()
+            if ham <= radius and any(
+                bv == bw and size[bv] <= max_block_size
+                for bv, bw in zip(by_id[i], by_id[j])
+            ):
+                out.add((i, j, ham))
+    return out
+
+
+def test_simhash_banded_cap_matches_bruteforce_reference(spark, sf_dir):
+    """Under a hot-block cap the join keeps exactly the pairs the
+    brute-force cap reference keeps: within the radius AND sharing at
+    least one uncapped block, each pair once with its hamming value.
+    The cap must actually drop pairs here."""
     from curw_wrf_data_pusher_spark.llmops.dedup import (
         simhash_from_text,
         simhash_neighbors_banded,
@@ -1510,41 +1557,27 @@ def test_simhash_banded_engines_agree(spark, sf_dir):
     sig = simhash_from_text(
         load_table(spark, sf_dir, "documents")
     ).localCheckpoint()
+    sigs = {r.doc_id: r.simhash for r in sig.collect()}
+    uncapped = simhash_neighbors_banded(sig, radius=6).count()
     key = lambda r: (r.id_a, r.id_b, r.hamming)  # noqa: E731
-    for radius in (3, 6):
-        arrow = sorted(
-            map(key, simhash_neighbors_banded(
-                sig, radius=radius, engine="arrow").collect())
-        )
-        hof = sorted(
-            map(key, simhash_neighbors_banded(
-                sig, radius=radius, engine="hof").collect())
-        )
-        join = sorted(
-            map(key, simhash_neighbors_banded(
-                sig, radius=radius, engine="join").collect())
-        )
-        assert arrow == hof == join and len(arrow) > 0
-    # the hot-block cap drops the same blocks in all engines
-    capped_a = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, max_block_size=40, engine="arrow").collect()))
-    capped_h = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, max_block_size=40, engine="hof").collect()))
-    capped_j = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, max_block_size=40, engine="join").collect()))
-    assert capped_a == capped_h == capped_j
+    for cap in (40, 10):
+        capped = sorted(map(key, simhash_neighbors_banded(
+            sig, radius=6, max_block_size=cap).collect()))
+        ref = sorted(_simhash_capped_bruteforce(sigs, 6, 32, cap))
+        assert capped == ref, cap
+        assert 0 < len(capped) < uncapped, (cap, len(capped), uncapped)
 
 
 def test_simhash_64bit_banded_prunes_and_matches_bruteforce(spark, sf_dir):
     """The corpus-scale parameterization: 64-bit signatures at radius
     6 give 9-bit pigeonhole blocks (512 values) — the banded search
-    must (a) reproduce the brute-force pair set exactly, (b) agree
-    between the arrow and HOF engines (multi-chunk popcount path),
-    and (c) actually prune: the largest block group must be a small
-    fraction of the corpus, unlike 32-bit blocks where every value
-    is hot."""
+    must (a) reproduce the brute-force pair set exactly, including
+    signatures with the sign bit set, and (b) actually prune: the
+    largest block bucket must be a small fraction of the corpus,
+    unlike 32-bit blocks where every value is hot."""
     from curw_wrf_data_pusher_spark.llmops.dedup import (
-        _simhash_block_groups,
+        _simhash_block_explode,
+        _simhash_widths,
         simhash_from_text,
         simhash_neighbors_banded,
     )
@@ -1556,13 +1589,8 @@ def test_simhash_64bit_banded_prunes_and_matches_bruteforce(spark, sf_dir):
     assert sig.filter("simhash < 0").count() > 0
 
     key = lambda r: (r.id_a, r.id_b, r.hamming)  # noqa: E731
-    arrow = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, bits=64, engine="arrow").collect()))
-    hof = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, bits=64, engine="hof").collect()))
     join = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, bits=64, engine="join").collect()))
-    assert arrow == hof == join
+        sig, radius=6, bits=64).collect()))
 
     a = sig.select(F.col("doc_id").alias("id_a"),
                    F.col("simhash").alias("ha"))
@@ -1575,13 +1603,16 @@ def test_simhash_64bit_banded_prunes_and_matches_bruteforce(spark, sf_dir):
         .filter(F.col("hamming") <= 6)
         .collect()
     )))
-    assert arrow == brute
+    assert join == brute and len(join) > 0
 
-    # pruning: with 9-bit blocks the hottest group is far below the
+    # pruning: with 9-bit blocks the hottest bucket is far below the
     # corpus size (at 32 bits the hottest block held ~half the docs)
     max_m = (
-        _simhash_block_groups(sig, "doc_id", "simhash", 6, 64)
-        .select(F.max(F.size("ms"))).first()[0]
+        _simhash_block_explode(
+            sig, "doc_id", "simhash", *_simhash_widths(6, 64)
+        )
+        .groupBy("blk", "val").count()
+        .select(F.max("count")).first()[0]
     )
     assert max_m < n / 4, (max_m, n)
 
@@ -1591,7 +1622,7 @@ def test_simhash_cap_recovers_pairs_via_later_blocks(spark):
     block is capped away must still be found through a later uncapped
     matching block.  docs 0 and 1 share EVERY block; all docs share
     block 0's value (hot), so block 0 exceeds the cap — the (0, 1)
-    pair must come back via block 1+, in BOTH engines, exactly once."""
+    pair must come back via block 1+, exactly once."""
     from curw_wrf_data_pusher_spark.llmops.dedup import (
         simhash_neighbors_banded,
     )
@@ -1601,9 +1632,8 @@ def test_simhash_cap_recovers_pairs_via_later_blocks(spark):
     # distinct per doc.  docs 0 and 1 both have sig 0 (hamming 0).
     rows = [(0, 0), (1, 0)] + [(i, i << 5) for i in range(2, 30)]
     sig = spark.createDataFrame(rows, "doc_id long, simhash long")
-    for engine in ("arrow", "hof"):
-        pairs = simhash_neighbors_banded(
-            sig, radius=6, max_block_size=10, engine=engine
-        ).collect()
-        got = [(r.id_a, r.id_b, r.hamming) for r in pairs]
-        assert got == [(0, 1, 0)], (engine, got)
+    pairs = simhash_neighbors_banded(
+        sig, radius=6, max_block_size=10
+    ).collect()
+    got = [(r.id_a, r.id_b, r.hamming) for r in pairs]
+    assert got == [(0, 1, 0)], got

@@ -53,3 +53,19 @@ def test_all_queries_have_oracles():
     # tests/test_file_stats.py
     allowed_missing = {"p10_file_metadata", "p17_file_stats"}
     assert missing <= allowed_missing, f"queries without oracles: {missing}"
+
+
+def test_sf1_parity_candidates_resolve():
+    """Every name in scripts/sf1_parity.py's 10× sweep is a registered
+    query with an oracle, listed once (checked without building the
+    twin)."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts"))
+    from sf1_parity import CANDIDATES
+
+    missing = [n for n in CANDIDATES if n not in QUERIES or n not in ORACLES]
+    assert missing == [], f"sf1_parity candidates not registered: {missing}"
+    assert len(set(CANDIDATES)) == len(CANDIDATES)
