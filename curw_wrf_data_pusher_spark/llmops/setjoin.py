@@ -85,6 +85,9 @@ def _ordered_prefix(
     # can land a hair ABOVE the rational value (0.4·5 → 2.0000…04) and
     # a ceil overestimate would SHORTEN the prefix — a recall bug.
     # Subtracting 1e-9 only ever lengthens the prefix (safe side).
+    # The guard stays exact while the product's rounding error
+    # (≈ t·n · 2^-52) is below 1e-9, i.e. for t·n under ~4.5e6; above
+    # that a ceil overestimate is possible again.
     prefix_len = (
         F.col("__n")
         - F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-9))

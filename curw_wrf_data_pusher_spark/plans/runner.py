@@ -54,7 +54,7 @@ def run_wrf_push(
     """E1 (+E2 when rfield_dir given) for one run, all systems at once.
 
     ``grid``: long-format grid rows (from read_wrf_grid /
-    read_wrf_grid_parquet), possibly many systems/files.
+    read_wrf_grid_split), possibly many systems/files.
     ``systems``: restrict to these WRF systems — the sequential
     single-system variant (wrf_data_pusher_seq.py) is just this filter,
     which prunes the lake partition when wrf_system is a partition

@@ -131,22 +131,6 @@ def p11_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.join(b, a.grp.eqNullSafe(b.bgrp)).select("user_id", "grp")
 
 
-# String-function surface (P8-adjacent): case, substring, pad,
-# replace, edit distance.
-# Driver-gated through p8_p12_hash_strings (compound row).
-def p12_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.upper("c_name").alias("uname"),
-        F.substring("c_name", 3, 8).alias("mid"),
-        F.lpad(F.col("c_custkey").cast("string"), 12, "0").alias("padded"),
-        F.replace(F.col("c_name"), F.lit("#"), F.lit("-")).alias("repl"),
-        F.levenshtein("c_mktsegment", F.lit("BUILDING")).cast("long").alias("lev"),
-        F.length("c_name").cast("long").alias("nlen"),
-    )
-
-
 # P8+P12 compound driver row: the sha256 series-id hash (§1.1,
 # wrf_data_pusher.py:230-248) and the string-function surface in one
 # per-customer projection (join on c_custkey collapses to one scan —

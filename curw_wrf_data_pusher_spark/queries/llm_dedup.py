@@ -35,8 +35,6 @@ from ..llmops.simsearch import cosine_topk
 from ..llmops.textstats import (
     LANG_ORDER,
     STOPWORDS,
-    fingerprint,
-    language_id,
     quality_features,
 )
 from ..sources.lake import load_table
@@ -48,12 +46,6 @@ from .registry import register
 # Driver-gated through llm_exact_dedup_fingerprint (compound row).
 def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup_groups(load_table(spark, sf_dir, "documents"))
-
-
-# Fingerprint: normalized md5 (lower + collapse whitespace).
-# Driver-gated through llm_exact_dedup_fingerprint (compound row).
-def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint(load_table(spark, sf_dir, "documents"))
 
 
 # Exact-dedup + fingerprint + line-dedup compound driver row:
@@ -260,13 +252,6 @@ def llm_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidate_pairs(sig, bands=4, rows_per_band=2)
 
 
-# Exact n-gram Jaccard (the quadratic baseline the LSH approximates).
-# Driver-gated through llm_jaccard_verify (compound row).
-def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(shingles(docs), min_jaccard=0.5)
-
-
 # SimHash (32-bit sign-sum over token hashes, with multiplicity).
 _SIMHASH_BITS = " + ".join(
     f"""(CASE WHEN sum(CASE WHEN (x >> {b}) & 1 = 1 THEN 1 ELSE -1 END) >= 0
@@ -347,11 +332,6 @@ _LANG_SCORES = ",\n           ".join(
     )
     for lang in LANG_ORDER
 )
-
-
-# Driver-gated through llm_text_features (compound row).
-def llm_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return language_id(load_table(spark, sf_dir, "documents"))
 
 
 # The full text-analysis surface in ONE driver row and one scan:
@@ -474,14 +454,6 @@ def llm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return binary_metadata(docs, id_col="doc_id", binary_col="blob")
 
 
-# Token counting: whitespace + BPE-ish regex (pre-tokenizer shape).
-# Driver-gated through llm_text_features (compound row).
-def llm_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llmops.textstats import token_counts
-
-    return token_counts(load_table(spark, sf_dir, "documents"))
-
-
 # Embedding-cosine near-duplicate pairs: vectors whose cosine clears a
 # high threshold are near-dups (the embedding-space analogue of
 # MinHash). The REGISTERED plan is the pivot-angle-banded equi-join
@@ -588,9 +560,9 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only the materialized edge list enters the coalesce(1) union-find
     # task.  Calling connected_components_local directly here would pull
     # the whole pair-dedup aggregation into that single task (measured
-    # +23% at sf0.1; a scale-killer at corpus size).  Distributed
-    # fallbacks (min-label, large-star/small-star) live in llmops.clusters
-    # with a three-way agreement test.
+    # +23% at sf0.1; a scale-killer at corpus size).  The distributed
+    # fallback (large-star/small-star) lives in llmops.clusters; a
+    # union-find reference test pins both forms.
     from ..llmops.clusters import resolve_clusters
     from ..sources.lake import spread
 
@@ -600,36 +572,14 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resolve_clusters(pairs)
 
 
-# SimHash near-dup pairs: hamming distance over the 32-bit signatures
-# (xor + bit_count — verified identical in both engines). Complements
-# MinHash: SimHash catches small edits, MinHash catches shared
-# shingles.  Driver-gated through llm_simhash_neighbors (compound row).
-def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.lake import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sig = simhash_from_text(docs)
-    a = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("ha"))
-    b = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("hb"))
-    return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long"),
-        )
-        .filter(F.col("hamming") <= 6)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 # SimHash compound driver row: EVERY document's 32-bit signature
 # (stronger than pair-only visibility — all signature values enter the
 # hash) plus its near-dup neighbourhood stats (count and minimum
 # hamming within the <=6 radius; NULL min for isolated docs).
 # Production plan: pigeonhole-banded candidate generation
 # (llmops.dedup.simhash_neighbors_banded — equi-shuffle on signature
-# blocks, NOT the O(n²) broadcast inequality self-join; that form
-# survives as the test oracle in llm_simhash_neardup), then symmetrize
+# blocks, NOT the O(n²) inequality self-join the DuckDB oracle runs),
+# then symmetrize
 # pairs → per-doc stats → left join back onto the signatures so
 # isolated docs keep their row.
 @register(
@@ -691,23 +641,6 @@ def llm_simhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_near"), F.lit(0).cast("long")).alias("n_near"),
         "min_hamming",
     )
-
-
-# THE production dedup pipeline, composed: LSH candidates → exact
-# Jaccard verification on candidates only (never all pairs) → keep
-# confirmed near-dups. This is the shape that survives 100 TB: the
-# quadratic step runs on |candidates|, which banding keeps near-linear.
-# Driver-gated through llm_jaccard_verify (compound row).
-def llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llmops.dedup import verify_candidates
-    from ..sources.lake import spread
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingles(docs)  # long format needed by the exact verify join
-    cand = lsh_candidate_pairs(
-        minhash_signatures_from_text(spread(docs)), bands=4, rows_per_band=2
-    )
-    return verify_candidates(sh, cand, min_jaccard=0.7)
 
 
 # Signature-estimated Jaccard oracle term: fraction of agreeing
@@ -816,40 +749,6 @@ def llm_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("est_jaccard").alias("jaccard"),
     )
     return allp.unionByName(verified).unionByName(est)
-
-
-# Dedup survivors: the cleaned corpus — exactly one document (min id)
-# per distinct content, metadata intact. The "apply" form of
-# llm_dedup_exact.  Driver-gated through llm_survivor_corpus_stats.
-def llm_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang", "source", "n_chars")
-    )
-
-
-# Corpus report: per (lang, source) document/token/char totals and mean
-# quality — the dataset-card numbers a training-data pipeline publishes.
-# Driver-gated through llm_survivor_corpus_stats (compound row).
-def llm_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), " ")).cast("long")
-    n_chr = F.length("text").cast("long")
-    return (
-        docs.select("lang", "source", n_tok.alias("n_tok"), n_chr.alias("n_chr"))
-        .groupBy("lang", "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tok").alias("total_tokens"),
-            F.sum("n_chr").alias("total_chars"),
-            (F.sum("n_tok").cast("double") / F.count("*")).alias("mean_tokens"),
-        )
-    )
 
 
 # Survivors + corpus-stats compound driver row: the dataset-card

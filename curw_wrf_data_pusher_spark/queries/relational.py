@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.keys import parse_grid_key, series_hash_id, station_name
+from ..functions.keys import parse_grid_key, station_name
 from ..functions.timeutils import truncate_minute, utc_to_lk
 from ..operators.dedup import latest_per_series, latest_per_series_join
 from ..operators.diff import adjacent_diff
@@ -146,23 +146,6 @@ def p9_key_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keyed.select(
         "grid_key", parse_grid_key(F.col("grid_key")).alias("obs_id")
     ).filter(F.col("obs_id").isNotNull())
-
-
-# series-id hashing (§1.1): sha256 over ':'-joined tms metadata
-# (generate_timeseries_id semantics, wrf_data_pusher.py:230-248).
-# Driver-gated through p8_p12_hash_strings (compound row).
-def hash_series_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        series_hash_id(
-            F.lit("evening_18:00"),
-            F.format_string("%.6f", F.col("c_acctbal")),
-            F.format_string("%.6f", F.col("c_custkey").cast("double")),
-            F.lit("WRF_A"), F.lit("v4"), F.lit("Precipitation"),
-            F.lit("mm"), F.lit("Accumulative"),
-        ).alias("tms_id"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -524,14 +507,6 @@ def j1_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# U2 — dropna after outer join ≡ "instants covered by every source"
-# (gen_active_stations_rfields.py:214). Kept literal, not rewritten to
-# inner join, to preserve reference semantics.
-# Driver-gated through u2_j1_outer_dropna (compound row).
-def u2_dropna_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return j1_full_outer_join(spark, sf_dir).na.drop("any")
-
-
 # J1-outer + U2 compound driver row: the full-outer join result (nulls
 # preserved) and its dropna projection union-tagged — one hash checks
 # both the outer-join null semantics and the reference's dropna
@@ -723,27 +698,6 @@ def j6_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Rollup / grouping sets (absent in the reference; engine exposes
-# Spark's built-ins — SURVEY §2.4 note).
-# Driver-gated through a7_a8_distinct_rollup (compound row).
-def a8_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        _dsum("l_quantity").alias("sum_qty"), F.count("*").alias("n")
-    )
-
-
-# Distinct aggregation surface.
-# Driver-gated through a7_a8_distinct_rollup (compound row).
-def a7_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.count("*").alias("n_rows"),
-    )
-
-
 # A7+A8 compound driver row: distinct aggregates INSIDE a rollup — one
 # query exercising both the multi-distinct rewrite (Expand) and the
 # rollup grouping expansion at once.
@@ -859,20 +813,6 @@ def p10_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "yyyy-MM-dd HH:mm:ss",
             ).alias("fgt_lk"),
         )
-    )
-
-
-# Exact interpolated quantiles (engine exposes both exact percentile
-# and approx_percentile; only the exact form is oracle-comparable —
-# both engines use the standard (n-1)*p linear interpolation).
-# Driver-gated through a9_o1_percentiles_ranked (compound row).
-def a9_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("p50"),
-        F.expr("percentile(value, 0.9)").alias("p90"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
     )
 
 
@@ -1120,9 +1060,10 @@ def j6_j7_asof_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Cube + GROUPING() ids — the full grouping-sets surface next to
-# a8_rollup. grouping_id bit order matches CUBE column order in both
-# engines.  Driver-gated through a11_a12_cube_gsets (compound row).
+# Cube + GROUPING() ids — the full grouping-sets surface next to the
+# rollup in a7_a8_distinct_rollup. grouping_id bit order matches CUBE
+# column order in both engines.  Driver-gated through
+# a11_a12_cube_gsets (compound row).
 def a11_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(

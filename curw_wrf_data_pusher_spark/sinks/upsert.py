@@ -3,7 +3,9 @@
 Reference: batched ``INSERT ... ON DUPLICATE KEY UPDATE`` of
 ``[tms_id, time, fgt, value]`` with a retry-once-after-5s wrapper
 (wrf_data_pusher.py:119-140), run-metadata insert (:239-260) and a
-latest-fgt pointer update (:103-116) per successful push.
+latest-fgt pointer update (:103-116) per successful push.  That K3
+pointer needs no sink of its own: ``push_wrf_grid``'s run rows carry
+``max(fgt)`` per series, and upserting them on ``tms_id`` moves it.
 
 Two sinks:
 - ``upsert_parquet``: lake-native MERGE emulation — new rows win on the
@@ -362,8 +364,3 @@ def _execute_with_retry(conn, cur, sql, batch, retries, wait_s):
                 raise
             time.sleep(wait_s)
 
-
-def update_latest_fgt(runs: DataFrame, run_store_path: str) -> DataFrame:
-    """K3: latest-fgt pointer per series — in lake form the run table
-    merge keeps the max fgt per tms_id (wrf_data_pusher.py:103-116)."""
-    return runs.groupBy("tms_id").agg(F.max("fgt").alias("fgt"))

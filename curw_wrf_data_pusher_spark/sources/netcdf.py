@@ -13,7 +13,7 @@ Reference behavior reproduced (wrf_data_pusher.py:143-279):
 
 Spark architecture: NetCDF files are not splittable and have no native
 Spark source, so parallelism is across FILES: ``binaryFile`` scan (one
-row per file, bytes + mtime) → ``mapInPandas`` opening each file
+row per file, bytes + mtime) → ``mapInArrow`` opening each file
 in-memory and emitting long rows.  Filter/projection pushdown is
 option-driven (variable name, bbox, time slice are applied inside the
 reader before the hyperslab read).  At 100 TB (≈ thousands of daily
@@ -21,7 +21,10 @@ reader before the hyperslab read).  At 100 TB (≈ thousands of daily
 per-file output stays under a task's memory because the decode yields
 capped Arrow batches (``_ARROW_BATCH_ROWS``).  For FEW big files the
 intra-file route (``read_wrf_grid_split``) fans each file across N
-slab tasks instead.
+slab tasks instead.  The third route, the raw-``.nc`` stream
+(``streaming/file_stream.stream_wrf_nc_push``), reuses
+:func:`decode_grid_frame`; all three decode through
+:func:`decode_grid_arrow` → :func:`_grid_arrays`.
 
 Codec resolution: ``netCDF4`` when installed (all formats); otherwise
 pure-numpy codecs decode real ``.nc`` bytes in-container, dispatched
@@ -32,20 +35,16 @@ chunked/deflate/shuffle storage, dense fractal-heap links,
 vlen-string attributes — both written from their public format
 specifications).  Only exotic HDF5 structures (link B-trees deeper
 than one level, v4 chunk indexes, vlen DATA columns) still require
-the C library.  ``read_wrf_grid_parquet`` reads the same logical grid
-from the F1-shaped parquet fixture and feeds the identical downstream
-plan.
+the C library.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: long-format grid schema shared by both ingestion paths.
+#: long-format grid schema every ingestion route emits.
 GRID_SCHEMA = (
     "wrf_system string, source_file string, fgt_utc timestamp, "
     "epoch_str string, t_idx int, xtime_min long, y int, x int, "
@@ -76,7 +75,7 @@ def _netcdf_available() -> bool:
 
 
 def _default_open_dataset():
-    """The ``bytes -> dataset`` opener both ingest routes share:
+    """The ``bytes -> dataset`` opener every ingest route shares:
     ``netCDF4.Dataset`` when the C stack is installed, else the
     pure-numpy codecs dispatched by magic — classic CDF-1/2/5 via
     ``sources/netcdf3`` and netCDF-4/HDF5 via the ``sources/hdf5``
@@ -146,7 +145,7 @@ def read_wrf_grid(
     reference's index-first read.
 
     ``open_dataset``: injectable ``bytes -> dataset`` callable (default:
-    in-memory ``netCDF4.Dataset``).  The dataset only needs the surface
+    :func:`_default_open_dataset`).  The dataset only needs the surface
     the decode uses — ``.variables`` with WRF-style slicing, attribute
     access, ``.close()`` — so the whole decode logic (axis slicing, both
     epoch encodings, bbox index contiguity, empty-bbox guard, mask fill)
@@ -333,44 +332,6 @@ def decode_grid_frame(
     )
 
 
-def decode_grid_bytes(
-    content: bytes,
-    path: str,
-    mtime,
-    bbox: dict,
-    variable: str,
-    t_slice: tuple[int, int] | None,
-    system_from_path: bool,
-    open_dataset,
-) -> "pd.DataFrame | None":
-    """Decode ONE file's bytes to the long grid frame as pandas (None
-    when the bbox misses the file's grid) — used by the Spark-4
-    Python DataSource (nc_datasource.py); the mapInArrow reader above
-    uses :func:`decode_grid_arrow`.  Both wrap the same
-    :func:`_grid_arrays` core, so the ingestion paths cannot drift."""
-    g = _grid_arrays(
-        content, path, bbox, variable, t_slice, system_from_path,
-        open_dataset,
-    )
-    if g is None:
-        return None
-    return pd.DataFrame(
-        {
-            "wrf_system": g["system"],
-            "source_file": path,
-            "fgt_utc": mtime,
-            "epoch_str": g["epoch_str"],
-            "t_idx": g["t_idx"],
-            "xtime_min": g["xtime_min"],
-            "y": g["y"],
-            "x": g["x"],
-            "latitude": g["latitude"],
-            "longitude": g["longitude"],
-            "rainnc_cum": g["rainnc_cum"],
-        }
-    )
-
-
 def decode_grid_arrow(
     content: bytes,
     path: str,
@@ -382,8 +343,9 @@ def decode_grid_arrow(
     open_dataset,
     pa,
 ):
-    """Arrow twin of :func:`decode_grid_bytes`: GENERATOR of
-    ``RecordBatch``es built zero-copy from the decode's numpy columns
+    """Decode ONE file's bytes (the per-file step of every ingest
+    route): GENERATOR of ``RecordBatch``es built zero-copy from the
+    :func:`_grid_arrays` numpy columns
     (yields nothing when the bbox misses the file's grid).  ``mtime``
     is the input batch's timestamp SCALAR — its Arrow type (us,
     session tz) is reused verbatim for ``fgt_utc``.
@@ -515,39 +477,6 @@ def _grid_arrays(
         }
     finally:
         ds.close()
-
-
-def read_wrf_grid_parquet(
-    spark: SparkSession,
-    path: str,
-    epoch_str: str,
-    fgt_utc: str,
-    bbox: dict | None = None,
-) -> DataFrame:
-    """Read an F1-shaped parquet grid table (FIXTURES.md §F1) into the
-    same long schema ``read_wrf_grid`` produces.  The bbox filter is a
-    plain Catalyst predicate → parquet pushdown does the hyperslab's
-    job."""
-    df = spark.read.parquet(path)
-    out = df.select(
-        "wrf_system",
-        F.lit(path).alias("source_file"),
-        F.lit(fgt_utc).cast("timestamp").alias("fgt_utc"),
-        F.lit(epoch_str).alias("epoch_str"),
-        F.col("t_idx").cast("int"),
-        F.col("xtime_min").cast("long"),
-        F.col("y").cast("int"),
-        F.col("x").cast("int"),
-        "latitude",
-        "longitude",
-        "rainnc_cum",
-    )
-    if bbox:
-        out = out.filter(
-            F.col("latitude").between(bbox["lat_min"], bbox["lat_max"])
-            & F.col("longitude").between(bbox["lon_min"], bbox["lon_max"])
-        )
-    return out
 
 
 def assemble_grid_cube(pdf: pd.DataFrame, value_col: str = "rainnc_cum"):

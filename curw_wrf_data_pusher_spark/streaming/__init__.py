@@ -3,7 +3,6 @@ from .file_stream import (
     dedup_within_watermark,
     session_window_agg,
     stream_stream_join,
-    stream_wrf_push,
     windowed_obs_resample,
 )
 from .quality_monitor import (
@@ -22,6 +21,5 @@ __all__ = [
     "stream_lm_gate",
     "stream_quality_monitor",
     "stream_stream_join",
-    "stream_wrf_push",
     "windowed_obs_resample",
 ]

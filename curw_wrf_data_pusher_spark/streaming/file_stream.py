@@ -3,8 +3,8 @@
 The reference is cron-driven batch: a daily file lands, the whole file
 is (re)pushed as an upsert keyed by (tms_id, time) with a new fgt.
 Streaming mapping:
-- source discovery → file-source stream on the partitioned grid dir
-  (replaces the path-probe `is_netcdf_ready.sh` gate);
+- source discovery → ``binaryFile`` file-source stream over the raw
+  ``.nc`` drop dir (replaces the path-probe `is_netcdf_ready.sh` gate);
 - whole-file semantics → ``foreachBatch``: each micro-batch runs the
   SAME batch plan (persisted_push) and upserts idempotently — late or
   re-delivered files simply re-upsert with a newer fgt, exactly the
@@ -27,48 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.config import WrfConfig
 from ..plans.wrf_push import persisted_push
-from ..sources.netcdf import GRID_SCHEMA
-
-
-def stream_wrf_push(
-    spark: SparkSession,
-    watch_dir: str,
-    cfg: WrfConfig,
-    sink: Callable[[DataFrame, DataFrame], None],
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``watch_dir`` for F1-shaped parquet grid drops and push
-    each arrival through the E1 plan into ``sink(fact, runs)``.
-
-    ``available_now=True`` = process the backlog then stop — the
-    cron-equivalent trigger; False = continuous micro-batches.
-
-    Whole-file semantics: the lag-diff needs each grid cell's full time
-    series in one batch, so a drop must be a single file (like its .nc
-    original).  ``maxFilesPerTrigger=1`` then makes every micro-batch
-    exactly one complete grid — the reference's unit of work."""
-    stream = (
-        spark.readStream.schema(GRID_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        # each grid drop is a directory of parquet parts
-        .option("recursiveFileLookup", "true")
-        .parquet(watch_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with persisted_push(batch_df, cfg) as (fact, runs):
-            sink(fact, runs)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+from ..sources.netcdf import decode_grid_frame
 
 
 def stream_wrf_nc_push(
@@ -87,10 +46,9 @@ def stream_wrf_nc_push(
     decode each file's bytes with the pure-Python codecs and run the
     E1 push into ``sink(fact, runs)``.
 
-    Unlike :func:`stream_wrf_push` (which watches pre-decoded parquet
-    grid drops), the source here is the ``binaryFile`` format as a
-    STREAMING file source — the checkpoint guarantees each .nc lands
-    in exactly one micro-batch, and ``max_files_per_trigger=1``
+    The source is the ``binaryFile`` format as a STREAMING file
+    source — the checkpoint guarantees each .nc lands in exactly one
+    micro-batch, and ``max_files_per_trigger=1``
     (the default) keeps the reference's one-file-per-run unit of work
     (the lag diff needs a file's full time axis in one batch, which a
     single .nc is by construction).  A LARGER cap — or ``None`` for
@@ -100,8 +58,6 @@ def stream_wrf_nc_push(
     in parallel within one micro-batch (one decode task per file).
     The decode is the SAME ``decode_grid_frame`` stage the batch
     reader uses, so the routes cannot drift."""
-    from ..sources.netcdf import decode_grid_frame
-
     reader = (
         spark.readStream.format("binaryFile")
         .schema(

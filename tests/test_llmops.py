@@ -3,6 +3,8 @@ vs brute force, multimodal mapInPandas plumbing, NetCDF reader gating."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -538,6 +540,16 @@ def test_simhash_neighbors_query_has_no_nested_loop_join(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def _join_keys(plan: str) -> list[tuple[str, str]]:
+    """``(join node, its "Left keys" line)`` for every join in a
+    formatted plan, in plan order."""
+    return re.findall(
+        r"^\(\d+\) (\w+Join)\b.*\nLeft keys \[\d+\]: (.*)$",
+        plan,
+        flags=re.M,
+    )
+
+
 def test_verify_join_strategy_pinned(spark, sf_dir):
     """The exact-verify joins (candidates x per-doc set arrays) must be
     SHUFFLED HASH joins, never broadcast: the r11 and r15 100x probes
@@ -569,11 +581,16 @@ def test_verify_join_strategy_pinned(spark, sf_dir):
             threshold=0.5,
         ),
     ):
-        plan = plan_of(df)
-        # the two id-keyed verify joins (one per side) — the df-count
-        # join deeper in the tree may legitimately broadcast (its
-        # count side sits above a measured exchange)
-        assert plan.count("ShuffledHashJoin") >= 2
+        # the two verify joins are the ones keyed on id_a / id_b (one
+        # per side) — the df-count join deeper in the tree may
+        # legitimately broadcast (its count side sits above a measured
+        # exchange)
+        verify = [
+            node
+            for node, keys in _join_keys(plan_of(df))
+            if re.search(r"\bid_[ab]#", keys)
+        ]
+        assert verify == ["ShuffledHashJoin"] * 2, verify
 
 
 def test_lsh_hot_bucket_cap(spark):

@@ -2,7 +2,7 @@
 
 netCDF4 is absent from this container, so ``read_wrf_grid`` /
 ``write_netcdf_grid`` take injectable dataset factories.  These tests
-drive the real Spark plans (binaryFile scan → mapInPandas decode;
+drive the real Spark plans (binaryFile scan → mapInArrow decode;
 groupBy → applyInPandas encode) against a pickle-backed stub "codec"
 that honours the exact surface the reference files expose
 (wrf_data_pusher.py:143-279): WRF-style 3-D XLAT/XLONG indexing, the
@@ -283,149 +283,3 @@ def test_write_then_read_roundtrip(spark, tmp_path):
         back["latitude"].to_numpy(), src["latitude"].to_numpy()
     )
     assert back["epoch_str"].unique().tolist() == ["2024-06-01 00:00:00"]
-
-
-def test_wrfgrid_datasource_matches_mapinpandas_reader(spark, tmp_path):
-    """spark.read.format('wrfgrid') must produce the same rows as
-    read_wrf_grid — they share decode_grid_bytes, and this pins the
-    DataSource plumbing (options parsing, partition planning, native
-    row conversion) on top of it."""
-    from curw_wrf_data_pusher_spark.sources.nc_datasource import (
-        register_wrfgrid,
-    )
-
-    cube = np.arange(2 * 4 * 5, dtype="f8").reshape(2, 4, 5)
-    root = _write_file(
-        tmp_path, "d03_RAINNC.nc",
-        _make_nc_bytes(LATS, LONS, [0, 15], cube, mask_cell=(1, 2, 2)),
-    )
-    # a second system directory → a second input partition
-    d2 = tmp_path / "wrfB"
-    d2.mkdir()
-    (d2 / "d03_RAINNC.nc").write_bytes(
-        _make_nc_bytes(LATS, LONS, [0, 15], cube + 100.0)
-    )
-
-    register_wrfgrid(spark, codec=stub_open)
-    ds = (
-        spark.read.format("wrfgrid")
-        .option("bbox", "6.6,7.4,79.6,81.0")
-        .load(root)
-    )
-    # one input partition per .nc file
-    assert ds.rdd.getNumPartitions() == 2
-
-    cols = [
-        "wrf_system", "source_file", "epoch_str", "t_idx", "xtime_min",
-        "y", "x", "latitude", "longitude", "rainnc_cum",
-    ]
-    key = ["source_file", "t_idx", "y", "x"]
-    got = ds.toPandas()[cols].sort_values(key).reset_index(drop=True)
-    want = (
-        read_wrf_grid(spark, root, bbox=KELANI, open_dataset=stub_open)
-        .toPandas()[cols]
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    # binaryFile reports URIs (file:/…), the DataSource local paths —
-    # normalize the scheme, everything else must match exactly
-    want["source_file"] = want["source_file"].str.replace(
-        "file:", "", regex=False
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(got, want)
-    assert set(got["wrf_system"]) == {"wrfA", "wrfB"}
-
-
-def test_wrfgrid_datasource_pushes_variable_and_t_slice(spark, tmp_path):
-    from curw_wrf_data_pusher_spark.sources.nc_datasource import (
-        register_wrfgrid,
-    )
-
-    cube = np.arange(3 * 4 * 5, dtype="f8").reshape(3, 4, 5)
-    root = _write_file(
-        tmp_path, "v1.nc",
-        _make_nc_bytes(LATS, LONS, [0, 15, 30], cube,
-                       epoch_attr="units"),
-    )
-    register_wrfgrid(spark, codec=stub_open)
-    out = (
-        spark.read.format("wrfgrid")
-        .option("bbox", "6.6,7.4,79.6,81.0")
-        .option("t0", "1").option("t1", "3")
-        .load(root)
-        .toPandas()
-    )
-    assert sorted(out["t_idx"].unique()) == [1, 2]
-    assert sorted(out["xtime_min"].unique()) == [15, 30]
-    # v1 epoch encoding surfaced through the units attribute
-    assert out["epoch_str"].unique().tolist() == ["2024-06-01 00:00:00"]
-
-
-def test_wrfgrid_datasource_rejects_half_open_t_slice(spark, tmp_path):
-    """t0 without t1 (or vice versa) must raise a clear ValueError at
-    planning time, not TypeError: int(None) (round-6 advisor)."""
-    from curw_wrf_data_pusher_spark.sources.nc_datasource import (
-        register_wrfgrid,
-    )
-
-    cube = np.arange(3 * 4 * 5, dtype="f8").reshape(3, 4, 5)
-    root = _write_file(
-        tmp_path, "v1.nc",
-        _make_nc_bytes(LATS, LONS, [0, 15, 30], cube, epoch_attr="units"),
-    )
-    register_wrfgrid(spark, codec=stub_open)
-    for opt in ("t0", "t1"):
-        with pytest.raises(Exception) as ei:
-            (spark.read.format("wrfgrid").option(opt, "1").load(root)
-             .collect())
-        assert "must be set together" in str(ei.value)
-
-
-def test_wrfgrid_datasource_splits_per_file(spark, tmp_path):
-    """splits_per_file=N plans N partitions per file, each decoding
-    one t-slab; the union equals the unsplit scan exactly (incl. a
-    t0/t1 option intersected with the slabs, and surplus empty
-    slabs when N > T)."""
-    from curw_wrf_data_pusher_spark.sources.nc_datasource import (
-        register_wrfgrid,
-    )
-
-    cube = np.arange(5 * 4 * 5, dtype="f8").reshape(5, 4, 5)
-    root = _write_file(
-        tmp_path, "d03_RAINNC.nc",
-        _make_nc_bytes(LATS, LONS, [0, 15, 30, 45, 60], cube),
-    )
-    register_wrfgrid(spark, codec=stub_open)
-
-    def scan(**opts):
-        r = spark.read.format("wrfgrid").option("bbox", "6.6,7.4,79.6,81.0")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return r.load(root)
-
-    key = ["source_file", "t_idx", "y", "x"]
-    cols = ["t_idx", "xtime_min", "y", "x", "rainnc_cum"]
-    base = scan().toPandas()[cols].sort_values(key[1:]).reset_index(drop=True)
-
-    split = scan(splits_per_file="3")
-    assert split.rdd.getNumPartitions() == 3
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(
-        split.toPandas()[cols].sort_values(key[1:]).reset_index(drop=True),
-        base,
-    )
-
-    # N > T: surplus slabs empty, union still exact
-    wide = scan(splits_per_file="9")
-    assert wide.rdd.getNumPartitions() == 9
-    pd.testing.assert_frame_equal(
-        wide.toPandas()[cols].sort_values(key[1:]).reset_index(drop=True),
-        base,
-    )
-
-    # t-slice option intersects the slabs
-    sliced = scan(splits_per_file="4", t0="1", t1="4").toPandas()
-    assert sorted(sliced["t_idx"].unique()) == [1, 2, 3]

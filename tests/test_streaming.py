@@ -3,82 +3,19 @@ foreachBatch E1 push → idempotent upsert store; windowed obs resample."""
 
 from __future__ import annotations
 
+import glob
 import os
+from datetime import datetime, timedelta
 
-import pytest
 from pyspark.sql import functions as F
 
 from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
 from curw_wrf_data_pusher_spark.streaming.file_stream import (
-    stream_wrf_push,
     windowed_obs_resample,
 )
 
 from .test_wrf_pipeline import CFG
 from .wrf_fixture import EPOCH_STR, FGT_UTC, make_grid_pdf
-
-
-def _write_grid_drop(spark, pdf, path, fgt):
-    (
-        spark.createDataFrame(pdf)
-        .withColumn("source_file", F.lit(path))
-        .withColumn("fgt_utc", F.lit(fgt).cast("timestamp"))
-        .withColumn("epoch_str", F.lit(EPOCH_STR))
-        .select(
-            "wrf_system", "source_file", "fgt_utc", "epoch_str",
-            F.col("t_idx").cast("int").alias("t_idx"),
-            F.col("xtime_min").cast("long").alias("xtime_min"),
-            F.col("y").cast("int").alias("y"),
-            F.col("x").cast("int").alias("x"),
-            "latitude", "longitude", "rainnc_cum",
-        )
-        # one file per drop: a drop models a complete .nc grid and must
-        # be processed atomically (whole-file semantics)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def test_stream_push_and_idempotent_redelivery(spark, tmp_path):
-    watch = str(tmp_path / "watch")
-    store = str(tmp_path / "store")
-    os.makedirs(watch)
-    pdf = make_grid_pdf()
-
-    def sink(fact, runs):
-        # the scale path end-to-end: each micro-batch merges through the
-        # partition-scoped dynamic overwrite (date derived from the key)
-        fact = fact.withColumn("time_date", F.substring("time", 1, 10))
-        upsert_parquet(
-            spark, fact, store, keys=["tms_id", "time"],
-            partition_cols=["time_date"],
-        )
-
-    # first drop
-    _write_grid_drop(spark, pdf[pdf.wrf_system == "A"],
-                     os.path.join(watch, "drop1"), FGT_UTC)
-    q = stream_wrf_push(
-        spark, watch, CFG, sink, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination()
-    n1 = spark.read.parquet(store).count()
-    assert n1 == 12 * 6 * 5  # one system
-
-    # second drop: system C + a RE-DELIVERY of system A with newer fgt
-    _write_grid_drop(spark, pdf, os.path.join(watch, "drop2"),
-                     "2024-06-03 03:17:45")
-    q = stream_wrf_push(
-        spark, watch, CFG, sink, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(store)
-    assert out.count() == 2 * 12 * 6 * 5  # no duplicates from re-delivery
-    # the re-delivered A series carries the NEW fgt (upsert semantics)
-    fgts = set(
-        r["fgt"] for r in out.select("fgt").distinct().collect()
-    )
-    assert fgts == {"2024-06-03 08:47:00"}
 
 
 def test_windowed_obs_resample_batch_parity(spark):
@@ -139,50 +76,6 @@ def test_dedup_within_watermark(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 3  # duplicate dropped
     assert got.dropDuplicates(["hash_id", "time"]).count() == 3
-
-
-def test_streaming_e1_equals_batch_e1(spark, tmp_path):
-    """availableNow streaming over file drops must produce exactly the
-    batch plan's results (same drops, same upsert store)."""
-    from curw_wrf_data_pusher_spark.plans.wrf_push import push_wrf_grid
-    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
-    from curw_wrf_data_pusher_spark.streaming.file_stream import stream_wrf_push
-
-    from .test_wrf_pipeline import CFG
-    from .wrf_fixture import make_grid_pdf
-
-    pdf = make_grid_pdf()
-    watch = str(tmp_path / "watch")
-    os.makedirs(watch)
-    _write_grid_drop(spark, pdf[pdf.wrf_system == "A"],
-                     os.path.join(watch, "d1"), FGT_UTC)
-    _write_grid_drop(spark, pdf[pdf.wrf_system == "C"],
-                     os.path.join(watch, "d2"), FGT_UTC)
-
-    stream_store = str(tmp_path / "s_store")
-
-    def sink(fact, runs):
-        upsert_parquet(spark, fact, stream_store, keys=["tms_id", "time"])
-
-    q = stream_wrf_push(
-        spark, watch, CFG, sink, str(tmp_path / "ck"), available_now=True
-    )
-    q.awaitTermination()
-
-    batch_grid = spark.read.option("recursiveFileLookup", "true").parquet(watch)
-    batch_fact, _ = push_wrf_grid(batch_grid, CFG)
-
-    got = (
-        spark.read.parquet(stream_store)
-        .toPandas().sort_values(["tms_id", "time"]).reset_index(drop=True)
-    )
-    want = (
-        batch_fact.toPandas()
-        .sort_values(["tms_id", "time"]).reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
 
 
 def test_session_window_agg_batch_semantics(spark):
@@ -522,8 +415,11 @@ def test_stream_wrf_nc_push_decodes_raw_files(spark, tmp_path):
     raw .nc files land in the watch dir, the binaryFile stream decodes
     REAL bytes (pure-Python codecs) and pushes through E1 into the
     upsert store.  A second availableNow run over the same checkpoint
-    processes only NEW files (exactly-once discovery), and the final
-    store equals the batch route (read_wrf_grid + push) file-for-file."""
+    processes only NEW files (exactly-once discovery); a third
+    re-delivers a system with a newer file mtime, which replaces that
+    system's rows with the new fgt and adds none.  The final store
+    equals the batch route (read_wrf_grid + push) over the current
+    files."""
     from curw_wrf_data_pusher_spark.plans.wrf_push import push_wrf_grid
     from curw_wrf_data_pusher_spark.sources.netcdf import (
         read_wrf_grid,
@@ -582,14 +478,60 @@ def test_stream_wrf_nc_push_decodes_raw_files(spark, tmp_path):
     got = spark.read.parquet(store)
     assert got.count() == 2 * 12 * 6 * 5
 
-    # the streamed store equals the batch route over the same files
-    fact_b, _runs_b = push_wrf_grid(
-        read_wrf_grid(spark, watch, bbox=world), CFG
+    fgt_before = {
+        r["tms_id"]: r["fgt"]
+        for r in got.select("tms_id", "fgt").distinct().collect()
+    }
+
+    # drop 3: system d1 is RE-DELIVERED — a new file in the same system
+    # dir with new values and a file mtime one hour newer
+    (old_d1,) = glob.glob(os.path.join(watch, "d1", "*.nc"))
+    staging = str(tmp_path / "staging")
+    redone = pdf[pdf.wrf_system == "A"].assign(
+        rainnc_cum=lambda d: d.rainnc_cum * 2
     )
+    write_netcdf_grid(grid_of(redone), staging).collect()
+    (staged,) = glob.glob(os.path.join(staging, "*.nc"))
+    new_d1 = os.path.join(watch, "d1", "redelivered.nc")
+    os.replace(staged, new_d1)
+    mtime = os.stat(old_d1).st_mtime + 3600
+    os.utime(new_d1, (mtime, mtime))
+    q = stream_wrf_nc_push(
+        spark, watch, CFG, sink, str(tmp_path / "ckpt"),
+        available_now=True, bbox=world,
+    )
+    q.awaitTermination()
+    got = spark.read.parquet(store)
+    assert got.count() == 2 * 12 * 6 * 5  # rows replaced, no duplicates
+
+    # the streamed store equals the batch route over the current files
+    # (the re-delivered d1 file instead of the original)
+    current = read_wrf_grid(spark, watch, bbox=world).filter(
+        ~F.col("source_file").endswith(os.path.basename(old_d1))
+    )
+    fact_b, _runs_b = push_wrf_grid(current, CFG)
     want = sorted(
-        (r["tms_id"], r["time"], r["value"]) for r in fact_b.collect()
+        (r["tms_id"], r["time"], r["value"], r["fgt"])
+        for r in fact_b.collect()
     )
     have = sorted(
-        (r["tms_id"], r["time"], r["value"]) for r in got.collect()
+        (r["tms_id"], r["time"], r["value"], r["fgt"])
+        for r in got.collect()
     )
     assert have == want
+
+    # d1's series moved to the new fgt (one hour later), d2's kept theirs
+    fgt_after = {
+        r["tms_id"]: r["fgt"]
+        for r in got.select("tms_id", "fgt").distinct().collect()
+    }
+    assert fgt_after.keys() == fgt_before.keys()
+    fmt = "%Y-%m-%d %H:%M:%S"
+    shift = {
+        datetime.strptime(fgt_after[k], fmt)
+        - datetime.strptime(fgt_before[k], fmt)
+        for k in fgt_before
+    }
+    assert shift == {timedelta(0), timedelta(hours=1)}
+    n_moved = sum(fgt_after[k] != fgt_before[k] for k in fgt_before)
+    assert n_moved == 6 * 5  # every d1 grid cell, no d2 one
