@@ -1,73 +1,29 @@
 #!/usr/bin/env python
-"""Benchmark the engine's headline queries.
+"""Benchmark the engine's headline queries at one scale factor.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] and prints two JSON lines, the full record
+and then a compact one, so that a tail capture always ends with a
+parseable line:
 {"metric": ..., "value": core_total_sec, "unit": "sec",
  "queries": {core name: sec, ...}, "sf": ...,
  "extended_queries": {name: sec, ...}, "extended_total": ...,
- "grand_total": ...}
+ "grand_total": ..., "calibration": {...}, "cpu_sec": {...}}
 
-ROUND-10 STRUCTURE (judge task 3): the bench had grown to 42 rows
-whose sum moved every round as new rows joined, while single-run
-noise stayed at ±20-25%.  The scoreboard is now split: a FIXED
-core-15 (SURVEY E1-E3 + the LLM flagships, best-of-3 minimum) is the
-headline "value"; everything else is reported separately under
-extended_queries.  Compare rounds on the core total — it cannot be
-moved by adding rows.  r9 equivalents for the core-15 (from
-BENCH_r09.json, minus the new wrf_e2_rfield_files sink row): see
-BENCH_r10 notes in NEXT.md.
+"value" sums the fixed CORE rows (the WRF pipelines E1-E3 plus the LLM
+flagships), each the minimum over at least 3 passes; every other row
+is reported under extended_queries.  Each query is forced end to end
+with the noop sink (sink rows write real files).  The calibration row
+times two fixed workloads that never change with engine code, so runs
+can divide out machine drift; cpu_sec is each query's executor CPU
+from the event log.  A performance claim is an interleaved A/B of
+perfbench (BENCHMARK.json), not a comparison of two bench artifacts.
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver collect). The headline set spans the engine's surface: scans
-+filters, shuffle aggs, broadcast joins, window functions, pivots, the
-WRF pipelines, and the LLM data-pipeline operators.
-
-CANONICAL NUMBER (round-11 rule, resolving the r10 scoreboard nit —
-BENCH_r10.json said 20.67 while NEXT.md prose said 19.70 from a
-different late run): the round's canonical core-15 value is the one
-in the DRIVER-recorded BENCH_r{N}.json artifact, full stop.  Local
-runs quoted in NEXT.md/SCALING.md are working measurements and must
-be labelled "local"; when prose and artifact disagree, the artifact
-wins.  The two r10 numbers differed by 4.9% — inside the noise floor
-below.
-
-NOISE FLOOR (measured round 5, identical code, consecutive runs):
-totals spanned 11.9-15.4 s before the load_table memo and 9.1-12.3 s
-after it — i.e. shared-machine load swings single-run totals by ±20%
-and individual sub-second queries by 2x. Round 4's broad "+2.6% drift"
-(15 of 21 queries slower with no code change) was this noise, not a
-regression. Compare rounds on the best of several runs, and treat
-per-query deltas under ~25% as unresolvable without n >= 6.
-
-ROUND-7 DRIFT RESOLUTION (judge task 2): two consecutive REPS=6
-best-of runs on the round-7 tree put the r5-identical 21-query subset
-at 9.88 s and 11.18 s vs r5's 8.97 s (+10% / +25%) — the r6 "+24% at
-min-of-3" drift sits inside the floor at n=6 and swings run-to-run
-with no code change in the subset's plans; no subset query stayed
->1.3x on best-of. Conclusion: contention noise, not a regression.
-The big mover this round was real, though: llm_curate_corpus's 8.54 s
-r6 row was 75% an O(n²)-splits expression bug in dup_ngram_ratio
-(fixed, see llmops/textstats.py) plus the membership-audit md5s (the
-bench now runs llm_curate_pipeline, the production path): 8.54 s ->
-2.36 s at the same REPS=6.
-
-KNOWN-BENIGN LOG TAIL (round-7 root cause of the r6 "truncated
-DAGScheduler stack trace"): intermittent bursts of
-  ERROR DAGScheduler: Failed to update accumulator N (Unknown class)
-  ... SparkException: attempted to access non-existent accumulator N
-are a shutdown/cleanup race, not a correctness problem.  When AQE
-re-plans (or a query finishes early via TakeOrdered/limit), the
-driver abandons in-flight stages and the finished QueryExecution's
-SQL-metric accumulators are unregistered by the ContextCleaner;
-straggler tasks of the abandoned stage still complete and post
-accumulator updates for ids that no longer exist.  DAGScheduler
-catches the update failure, logs it with a stack trace, and carries
-on — only UI metrics are lost; results are unaffected (all bench
-queries are separately hash-verified against DuckDB).  Reproduction
-is load-dependent: 736 occurrences in one r7 probe run, 0 in the
-identical next run.  The `## bench rep=I query=NAME` stderr markers
-let any future tail be attributed to the query that was running.
+Each timed run writes a ``## bench rep=I query=NAME`` marker to
+stderr, so a log tail can be attributed to the query that was running.
+Bursts of ``ERROR DAGScheduler: Failed to update accumulator N`` are a
+cleanup race (straggler tasks of a stage AQE abandoned report metrics
+for a finished query); only UI metrics are lost, results are not.
 """
 
 from __future__ import annotations
@@ -436,71 +392,6 @@ EXTENDED.append("wrf_s1_ingest_split_d03")
 EXTENDED.append("wrf_s1_ingest_split_d03_hdf5")
 
 
-#: Idle-box best-of-3 minima from the round-13 builder run
-#: (bench_r13.json) — the load-pollution reference (judge r13 task
-#: 1): a row whose best-of time exceeds 2x this value is SUSPECT and
-#: is automatically re-run; a row still >2x after the re-runs is
-#: listed in suspect_rows with the loadavg it saw, and the artifact
-#: self-reports publishable=false when that loadavg was elevated
-#: (>= LOAD1_PUBLISH_THRESHOLD).  Rationale for
-#: the threshold: a 1-minute loadavg at or above the core count means
-#: runnable threads exceeded cores for a sustained window — this
-#: process alone cannot hold that with sub-6-second queries, so it is
-#: external multi-tenant contention, which is exactly what polluted
-#: the r12 and r13 driver artifacts (judge had to re-measure both).
-R13_IDLE_MINIMA: dict[str, float] = {
-    "wrf_e1_push_rows": 0.712, "wrf_e3_hybrid_frame": 0.394,
-    "e2_rfield_contract": 1.024, "wrf_e2_rfield_files": 1.752,
-    "a1_pricing_summary": 0.675, "j3_broadcast_lookup": 0.835,
-    "w3_nearest_neighbor": 0.632, "s10_window_resample": 0.517,
-    "llm_dedup_exact": 0.183, "llm_minhash_lsh_pairs": 1.401,
-    "llm_setsim_pairs": 5.971, "llm_curate_pipeline": 2.368,
-    "llm_pq_topk": 3.111, "llm_pq_index_search": 3.153,
-    "llm_incremental_neardup": 3.341,
-    "q3_shipping_priority": 0.415, "j1_pivot_sources": 0.759,
-    "w1_lag_diff": 0.434, "w2_latest_per_series": 0.254,
-    "o1_total_order": 0.129, "llm_quality_features": 0.231,
-    "llm_simhash": 0.18, "llm_cosine_topk": 0.698,
-    "j6_asof_join": 0.743, "llm_dedup_clusters": 1.529,
-    "llm_contamination": 1.148, "llm_seq_packing": 0.548,
-    "llm_winnow_pairs": 1.922, "llm_substring_dedup": 2.129,
-    "llm_semantic_dedup": 3.284, "llm_ngram_logfreq": 2.218,
-    "w5_rolling_stats": 0.99, "llm_vocab_topk": 0.705,
-    "a16_countmin_freq": 2.072, "a18_mergeable_rollup": 0.345,
-    "a19_histograms": 0.667, "k11_snapshot_diff": 0.604,
-    "a23_kmv_distinct": 0.743, "llm_repetition_signals": 1.928,
-    "llm_mix_schedule": 0.278, "llm_pq_lloyd_topk": 3.874,
-    "llm_opq_topk": 5.065, "w15_range_frame": 0.784,
-    "w16_sliding_distinct": 0.929, "w17_sliding_distinct_kmv": 3.517,
-    "llm_bpe_pair_counts": 0.906, "w6_gap_fill": 3.673,
-    "llm_opq_serve": 1.193, "llm_simhash_neighbors": 3.064,
-    "w18_obs_qc": 0.633, "llm_cooccurrence": 1.343,
-    "llm_privacy_audit": 0.261, "llm_media_decode": 0.478,
-    "llm_stupid_backoff": 3.436, "llm_dsir_weights": 3.183,
-    "llm_ngram_store_topk": 0.485, "wrf_s1_ingest_full_d03": 6.072,
-    "wrf_s1_ingest_full_d03_hdf5": 5.662,
-    # r14 additions, measured idle this box (best-of-3, load1 1.2-1.5)
-    "wrf_s1_ingest_split_d03": 0.85,
-    "wrf_s1_ingest_split_d03_hdf5": 0.88,
-}
-
-#: Suspect rule + publish gate (judge r13 task 1), both documented in
-#: R13_IDLE_MINIMA's comment.  Override via env for other boxes.
-SUSPECT_FACTOR = 2.0
-LOAD1_PUBLISH_THRESHOLD = float(
-    os.environ.get("SPARK_GRAFT_LOAD1_MAX", os.cpu_count() or 32)
-)
-#: extra best-of passes granted to suspect rows before they publish
-SUSPECT_EXTRA_REPS = 2
-
-
-def _load1() -> float:
-    try:
-        return round(os.getloadavg()[0], 2)
-    except OSError:  # platform without getloadavg
-        return -1.0
-
-
 def _parse_cpu_per_query(log_dir: str) -> dict[str, float]:
     """Per-query executor-CPU seconds from the Spark event log
     (round-15, VERDICT r14 item 4): wall time at sf0.1 is stage-launch
@@ -624,11 +515,9 @@ def main() -> None:
     # best-of-3; EXTENDED rows run REPS passes.
     core_reps = max(3, REPS)
     best: dict[str, float] = {}
-    load_at_best: dict[str, float] = {}
 
     def run_one(rep, name: str) -> None:
         print(f"## bench rep={rep} query={name}", file=sys.stderr)
-        load1 = _load1()  # load BEFORE the run: the box's state, not ours
         spark.sparkContext.setJobDescription(f"bench:{name}:rep={rep}")
         t0 = time.perf_counter()
         if name in SINKS:
@@ -640,7 +529,6 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         if name not in best or dt < best[name]:
             best[name] = dt
-            load_at_best[name] = load1
 
     for rep in range(core_reps):
         for name in CORE:
@@ -648,44 +536,6 @@ def main() -> None:
         if rep < REPS:
             for name in EXTENDED:
                 run_one(rep, name)
-
-    # LOAD-ROBUSTNESS PASS (judge r13 task 1): any row whose best-of
-    # time exceeds SUSPECT_FACTOR x its idle-box r13 minimum gets
-    # SUSPECT_EXTRA_REPS more attempts before publishing — the r12 and
-    # r13 driver artifacts both carried multi-tenant-contention rows
-    # that a judge then had to re-measure by hand.  Rows still >2x
-    # after the retries are published in suspect_rows with the loadavg
-    # their best rep saw; publishable=false when that loadavg was
-    # elevated (>= LOAD1_PUBLISH_THRESHOLD — see R13_IDLE_MINIMA).
-    def _suspects() -> list[str]:
-        return [
-            n for n, ref in R13_IDLE_MINIMA.items()
-            if n in best and best[n] > SUSPECT_FACTOR * ref
-        ]
-
-    for extra in range(SUSPECT_EXTRA_REPS):
-        sus = _suspects()
-        if not sus:
-            break
-        print(
-            f"## bench load-retry pass={extra} rows={sus} "
-            f"load1={_load1()}", file=sys.stderr,
-        )
-        for name in sus:
-            run_one(f"retry{extra}", name)
-
-    suspect_rows = {
-        n: {
-            "sec": round(best[n], 3),
-            "idle_ref_sec": R13_IDLE_MINIMA[n],
-            "load1_at_best": load_at_best.get(n, -1.0),
-        }
-        for n in _suspects()
-    }
-    worst_suspect_load = max(
-        (r["load1_at_best"] for r in suspect_rows.values()), default=0.0
-    )
-    publishable = worst_suspect_load < LOAD1_PUBLISH_THRESHOLD
 
     # flush + parse the event log for per-query executor-CPU (the
     # sf0.1 wall numbers are latency-bound; CPU is the 100 TB signal)
@@ -716,43 +566,16 @@ def main() -> None:
                 "extended_total": ext_total,
                 "grand_total": round(core_total + ext_total, 3),
                 "calibration": calibration,
-                # load-robustness block (judge r13 task 1): per-row
-                # 1-min loadavg sampled immediately before the rep
-                # that produced each row's best time, the publish
-                # gate's threshold, and the rows (if any) still >2x
-                # their idle-box r13 minima after the automatic
-                # retries.  publishable=false means: do not compare
-                # this artifact's absolute times across rounds — a
-                # suspect row's best rep started under external load.
-                "query_load1_at_best": {
-                    n: load_at_best.get(n, -1.0) for n in best
-                },
-                "load1_publish_threshold": LOAD1_PUBLISH_THRESHOLD,
-                "suspect_rows": suspect_rows,
-                "publishable": publishable,
                 # per-query executor-CPU seconds (min across reps) from
-                # the event log — VERDICT r14 item 4: wall at sf0.1 is
-                # latency-bound, CPU is what transfers to 100 TB
+                # the event log: wall at sf0.1 is latency-bound
                 "cpu_sec": cpu_sec,
             }
         )
     )
-    # FINAL COMPACT LINE (VERDICT r14 item 1 — bench contract repair):
-    # the rich line above has grown past the driver's 2000-char tail
-    # capture, which silently cost round 14 its round-over-round
-    # geomean (PERF_r14 prev_bench_ok=false: BENCH_r13.json's tail
-    # truncates the line's FRONT — BENCH_r13.json carries parsed=null).
-    # Printing a compact record LAST guarantees any tail window ends
-    # with a complete, parseable JSON line carrying the same
-    # metric/value/unit/queries/sf contract.  DELIBERATELY minimal
-    # (~700 chars, deterministic): the scoreboard "queries" map is the
-    # pinned core-15 exactly as in the rich line, so a driver that
-    # sums it still reconstructs "value"; a full per-row compact map
-    # would sit at ~1.9k chars — flaky against the 2k window — and the
-    # extended seconds remain available in the rich line, which the
-    # driver parses from full stdout when it runs the bench itself
-    # (BENCH_r14.json parsed it fine; only the cross-round tail
-    # re-parse was broken).
+    # compact record LAST: the full line outgrows a 2000-char tail
+    # capture, so any tail window still ends with a complete JSON line
+    # carrying metric/value/unit/queries/sf (~700 chars; the extended
+    # seconds stay in the full line)
     compact = {
         "metric": (
             "core-15 headline wall time "
@@ -764,7 +587,6 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "extended_total": ext_total,
         "grand_total": round(core_total + ext_total, 3),
-        "publishable": publishable,
     }
     print(json.dumps(compact, separators=(",", ":")))
 

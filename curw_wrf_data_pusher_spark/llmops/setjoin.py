@@ -5,7 +5,7 @@ The third leg of the dedup tripod:
 
 - MinHash-LSH (``dedup.lsh_candidate_pairs``) — probabilistic recall,
   tunable via bands×rows;
-- pivot-angle banding (``simsearch.banded_neardup_pairs``) — exact for
+- the id-blocked self-join (``simsearch.neardup_pairs``) — exact for
   cosine over embeddings;
 - THIS module — exact for Jaccard over token/shingle SETS, no
   signatures and no probability: recall 1.0 by the prefix-filter
@@ -33,8 +33,7 @@ verify join fans out only over |candidates|.  Hot prefix tokens (a
 boilerplate corpus can make even its "rarest" tokens shared by
 thousands of docs) take ``max_token_group`` + the
 ``setsim_dropped_tokens`` accounting companion, mirroring
-``lsh_dropped_buckets`` / ``simhash_dropped_blocks`` /
-``neardup_dropped_cells``.
+``lsh_dropped_buckets`` / ``simhash_dropped_blocks``.
 """
 
 from __future__ import annotations

@@ -14,7 +14,6 @@
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -24,40 +23,9 @@ from .fastlit import _render, dlit
 
 #: Dimensions for which a column-vs-column dot product is emitted as
 #: the fixed-dimension indexed fold (no per-row zipped-array
-#: allocation — see ``_dot_sql``).  Any other dimension falls back to
-#: the zip_with fold at full correctness; production sets the corpus
-#: dim(s) here.  Read once at import: plan-build time, not a per-row
-#: decision.
-def _parse_codegen_dims(raw: str) -> tuple[int, ...]:
-    """Validated parse: a malformed or non-positive entry raises a
-    configuration error NAMING the env var at import (a 0/negative dim
-    would otherwise emit invalid ``sequence(0, -1)`` SQL deep inside
-    ``_fixed_dot_sql``, far from the misconfiguration)."""
-    dims = []
-    for x in raw.split(","):
-        x = x.strip()
-        if not x:
-            continue
-        try:
-            v = int(x)
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_CODEGEN_DIMS must be a comma-separated "
-                f"list of positive integers; got {x!r} in {raw!r}"
-            ) from None
-        if v <= 0:
-            raise ValueError(
-                "SPARK_GRAFT_CODEGEN_DIMS entries must be positive "
-                f"(a fixed-dim dot over {v} elements is meaningless); "
-                f"got {raw!r}"
-            )
-        dims.append(v)
-    return tuple(dims)
-
-
-_CODEGEN_DIMS: tuple[int, ...] = _parse_codegen_dims(
-    os.environ.get("SPARK_GRAFT_CODEGEN_DIMS", "64")
-)
+#: allocation — see ``_dot_sql``): the corpus dim.  Any other
+#: dimension falls back to the zip_with fold at full correctness.
+_CODEGEN_DIMS: tuple[int, ...] = (64,)
 
 
 def _fold_dot_sql(a: str, b: str) -> str:
@@ -70,23 +38,11 @@ def _fold_dot_sql(a: str, b: str) -> str:
     )
 
 
-_DOT_FORM = os.environ.get("SPARK_GRAFT_DOT_FORM", "seqfold")
-
-
 def _fixed_dot_sql(a: str, b: str, d: int) -> str:
     """Known-dimension dot product, value-identical to the fold (same
-    left-association from +0.0, same per-element double casts).
-    ``seqfold``: one indexed fold over a constant index sequence — no
-    intermediate zipped-array allocation per row, compact generated
-    code.  ``unroll``: fully unrolled sum — fastest when the
-    expression appears once, but k copies per row (centroid scoring)
-    bloat generated methods past the JIT's limits."""
-    if _DOT_FORM == "unroll":
-        terms = "".join(
-            f" + (cast({a}[{i}] as double) * cast({b}[{i}] as double))"
-            for i in range(d)
-        )
-        return "cast(0.0 as double)" + terms
+    left-association from +0.0, same per-element double casts): one
+    indexed fold over a constant index sequence — no intermediate
+    zipped-array allocation per row, compact generated code."""
     return (
         f"aggregate(sequence(0, {d - 1}), cast(0.0 as double),"
         f" (acc, i) -> acc + (cast({a}[i] as double)"
@@ -111,7 +67,7 @@ def _dot_sql(a: str, b, fixed: bool = True) -> str:
     assignment queries (llm_semantic_dedup 3.3 -> 7.5 s)."""
     if isinstance(b, (list, tuple)):
         return _fold_dot_sql(a, _render(list(b)))
-    if not _CODEGEN_DIMS or not fixed:
+    if not fixed:
         return _fold_dot_sql(a, b)
     whens = " ".join(
         f"WHEN size({a}) = {d} AND size({b}) = {d}"
@@ -124,8 +80,8 @@ def _dot_sql(a: str, b, fixed: bool = True) -> str:
 def _norm_sql(a: str) -> str:
     """Norms keep the compact fold form: a norm column is computed
     once per ROW (not per pair), and Catalyst's projection collapse
-    inlines it into every consumer expression (each pivot angle in
-    the banded path), so the smallest tree wins."""
+    inlines it into every consumer expression, so the smallest tree
+    wins."""
     return f"sqrt({_dot_sql(a, a, fixed=False)})"
 
 
@@ -420,233 +376,67 @@ def neardup_pairs(
     score_scale: int = 9,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cos) for
-    every pair clearing the threshold.
+    every pair clearing the threshold — exact all-pairs, each
+    unordered pair scored once.
 
-    This is the exact all-pairs form — the correctness baseline.  At
-    scale, bucket by the random-hyperplane signature first (see
-    ``lsh_bucket_topk``) so only in-bucket pairs are scored; the
-    comparison itself is unchanged."""
-    from ..sources.lake import spread
+    Id-blocked self-join: every vector lands in block ``b =
+    pmod(xxhash64(id), nb)``, where ``nb`` is the smallest block count
+    with ``nb(nb+1)/2`` block pairs covering the session's shuffle
+    partitions.  The left side replicates each row to keys (b, j) for
+    j >= b, the right side to keys (i, b) for i <= b, so blocks i <= j
+    meet in exactly one (i, j) key.  Hash blocks are equal-sized, so no
+    key holds more than (n/nb)² pairs however clustered the vectors
+    are — a template cluster needs no cap.  Each side is repartitioned
+    on the keys to ``nb(nb+1)/2`` partitions, an explicit count that
+    AQE never coalesces into a few tasks (the keys are hashed, so one
+    task can still hold two keys), and joined by a shuffled hash join:
+    neither side is ever broadcast.  Off-diagonal keys hold every pair
+    once; the diagonal keeps ``id_a < id_b``."""
+    n_parts = int(
+        corpus.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    nb = 1
+    while nb * (nb + 1) // 2 < n_parts:
+        nb += 1
+    n_keys = nb * (nb + 1) // 2
 
-    n = spread(corpus.select(
+    base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    )).withColumn("nrm", F.expr(_norm_sql("vec")))
-    a = n.select(
+    ).select(
+        "id", "vec", F.expr(_norm_sql("vec")).alias("nrm"),
+        F.pmod(F.xxhash64("id"), F.lit(nb)).alias("blk"),
+    )
+    a = base.select(
         F.col("id").alias("id_a"), F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = n.select(
+        F.col("nrm").alias("na"), F.col("blk").alias("ki"),
+        F.explode(F.sequence("blk", F.lit(nb - 1))).alias("kj"),
+    ).repartition(n_keys, "ki", "kj")
+    b = base.select(
         F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
+        F.col("nrm").alias("nv"),
+        F.explode(F.sequence(F.lit(0), "blk")).alias("ki"),
+        F.col("blk").alias("kj"),
+    ).repartition(n_keys, "ki", "kj")
+    # fixed=False: value-identical, and faster in this pair stage
+    # (sf0.1, 4-core box, 4 alternating reps: 5.1-5.8 s with the plain
+    # fold against 7.5-7.9 s with the guarded fixed-dim fold)
+    cos = F.round(
+        F.expr(_dot_sql("va", "vb", fixed=False))
+        / (F.col("na") * F.col("nv")),
+        score_scale,
     )
-    scored = (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos",
-            F.round(
-                F.expr(_dot_sql("va", "vb")) / (F.col("na") * F.col("nb")),
-                score_scale,
-            ),
+    return (
+        a.join(b.hint("shuffle_hash"), ["ki", "kj"])
+        .filter(
+            (F.col("ki") < F.col("kj")) | (F.col("id_a") < F.col("id_b"))
+        )
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            cos.alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
-    return scored.select("id_a", "id_b", "cos")
-
-
-def _banded_replicas(
-    corpus: DataFrame,
-    threshold: float,
-    dim: int | None,
-    id_col: str,
-    vec_col: str,
-    n_pivots: int,
-    eps: float,
-) -> tuple[DataFrame, float]:
-    """Shared prefix of ``banded_neardup_pairs`` and
-    ``neardup_dropped_cells``: per-vector pivot angles, home bands
-    (h1, h2), and the 2x2 adjacent-cell replication (b1, b2).
-    Returns (replicated_df, theta_t)."""
-    import math
-
-    from ..sources.lake import spread
-
-    if dim is None:
-        dim = corpus.select(
-            F.size(F.col(vec_col)).alias("d")
-        ).first()["d"]
-    if n_pivots < 2:
-        raise ValueError("banded_neardup_pairs needs >= 2 pivots")
-    theta_t = math.acos(max(-1.0, min(1.0, threshold))) + eps
-    pivots = _hyperplanes(dim, n_pivots)
-    pnorms = [math.sqrt(sum(v * v for v in p)) for p in pivots]
-
-    base = spread(corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    )).withColumn("nrm", F.expr(_norm_sql("vec")))
-    for i, (p, pn) in enumerate(zip(pivots, pnorms)):
-        cosv = F.expr(_dot_sql("vec", p)) / (F.col("nrm") * F.lit(pn))
-        base = base.withColumn(
-            f"ang{i}",
-            F.acos(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosv))),
-        )
-    base = base.withColumn(
-        "h1", F.floor(F.col("ang0") / F.lit(theta_t))
-    ).withColumn("h2", F.floor(F.col("ang1") / F.lit(theta_t)))
-    # replicate to the 2x2 adjacent cells; a qualifying pair's home
-    # bands differ by <= 1 per pivot, so it meets in cell
-    # (max(h1), max(h2)) — the emission filter in the caller keeps
-    # exactly that one meeting
-    cells = F.array(*[
-        F.struct(
-            (F.col("h1") + d1).alias("b1"), (F.col("h2") + d2).alias("b2")
-        )
-        for d1 in (0, 1) for d2 in (0, 1)
-    ])
-    repl = base.select(
-        "id", "vec", "nrm", "h1", "h2",
-        *[f"ang{i}" for i in range(n_pivots)],
-        F.explode(cells).alias("cell"),
-    ).select("*", F.col("cell.b1").alias("b1"), F.col("cell.b2").alias("b2"))
-    return repl, theta_t
-
-
-def banded_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.9,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_scale: int = 9,
-    n_pivots: int = 4,
-    eps: float = 1e-6,
-    max_cell_size: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via EXACT pivot-angle
-    banding — the scale path that replaces ``neardup_pairs``'s O(n²)
-    broadcast inequality self-join, with identical results.
-
-    Metric-space pruning (triangle inequality on the sphere): for any
-    pivot direction p, ``angle(a,b) >= |angle(a,p) - angle(b,p)|``, so
-    every pair with ``cos(a,b) >= threshold`` (i.e. angle <= theta_T =
-    arccos(threshold)) satisfies ``|angle(a,p) - angle(b,p)| <=
-    theta_T`` for EVERY pivot.  Quantizing pivot angles into bands of
-    width theta_T therefore puts a qualifying pair in the same or
-    adjacent bands — recall is 1.0 by construction, not probabilistic
-    (unlike hyperplane LSH, which can miss pairs).  The exact cosine
-    filter inside the join keeps precision exact too.
-
-    Plan shape: each vector is replicated to its 2x2 adjacent band cells
-    over two pivots and equi-joined on (band1, band2) — a shuffled hash/
-    sort-merge join, never BroadcastNestedLoopJoin.  The remaining
-    pivots prune candidates with cheap precomputed-angle comparisons
-    BEFORE the full ``dim``-element dot product.  Each qualifying pair
-    is emitted exactly once: only in the cell ``(greatest(h1),
-    greatest(h2))`` of the two members' home bands.  At 100 TB the join
-    partitions by band cell; tight thresholds (0.9 → ~7 bands/pivot,
-    ~49 cells) prune hard, loose thresholds degrade gracefully toward
-    partitioned all-pairs — the problem's intrinsic cost, but shuffled
-    across the cluster instead of broadcast-nested-looped.
-
-    Pivots are the deterministic md5-derived directions of
-    ``_hyperplanes`` — no RNG state, reproducible everywhere.
-
-    Hot-cell skew guard (mirrors ``lsh_candidate_pairs``'s
-    ``max_bucket_size`` / ``simhash_neighbors_banded``'s
-    ``max_block_size``): a template cluster of near-identical
-    embeddings lands every member in one (b1, b2) cell and the
-    equi-join does |cell|² work inside that key's partition — AQE
-    skew-join splits the partition across tasks, but the intrinsic
-    pair count stands.  ``max_cell_size`` drops cells with more
-    replicated members before the join; such cells are near-certain
-    duplicate clusters better handled by exact dedup.  Use
-    ``neardup_dropped_cells`` with the same arguments to account for
-    what was dropped (cell + member count) — a production job logs
-    that aggregate next to its pair count so drops are visible, not
-    silent.  Default ``None`` joins every cell (exact semantics,
-    identical rows to ``neardup_pairs``).
-
-    Returns (id_a < id_b, cos) — same schema and rows as
-    ``neardup_pairs`` (pinned by tests/test_llmops.py)."""
-    repl, theta_t = _banded_replicas(
-        corpus, threshold, dim, id_col, vec_col, n_pivots, eps
-    )
-    if max_cell_size is not None:
-        # grouped cell sizes are partial-aggregated map-side to a
-        # handful of (b1, b2, n) rows — cell count is bounded by
-        # (bands_per_pivot + 1)², tiny at any corpus scale — so the
-        # keep-set broadcasts and the guard adds no fact-side shuffle
-        ok = (
-            repl.groupBy("b1", "b2")
-            .agg(F.count("*").alias("n_members"))
-            .filter(F.col("n_members") <= max_cell_size)
-            .select("b1", "b2")
-        )
-        repl = repl.join(F.broadcast(ok), ["b1", "b2"], "semi")
-
-    a = repl.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("va"),
-        F.col("nrm").alias("na"), F.col("h1").alias("h1a"),
-        F.col("h2").alias("h2a"),
-        *[F.col(f"ang{i}").alias(f"aa{i}") for i in range(n_pivots)],
-        "b1", "b2",
-    )
-    b = repl.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"), F.col("h1").alias("h1b"),
-        F.col("h2").alias("h2b"),
-        *[F.col(f"ang{i}").alias(f"ab{i}") for i in range(n_pivots)],
-        "b1", "b2",
-    )
-    pivot_filters = [
-        F.abs(F.col(f"aa{i}") - F.col(f"ab{i}")) <= F.lit(theta_t)
-        for i in range(n_pivots)
-    ]
-    joined = (
-        a.join(b, ["b1", "b2"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("b1") == F.greatest("h1a", "h1b"))
-        .filter(F.col("b2") == F.greatest("h2a", "h2b"))
-    )
-    for flt in pivot_filters:
-        joined = joined.filter(flt)
-    # fixed=False: the guarded fixed-dim dot was A/B-measured 1.5-4x
-    # SLOWER in this stage (llm_cosine_topk_neardup) while winning in
-    # cosine_topk/ivf_topk -- each site keeps its measured-best form
-    scored = joined.withColumn(
-        "cos",
-        F.round(
-            F.expr(_dot_sql("va", "vb", fixed=False))
-            / (F.col("na") * F.col("nb")),
-            score_scale,
-        ),
-    ).filter(F.col("cos") >= threshold)
-    return scored.select("id_a", "id_b", "cos")
-
-
-def neardup_dropped_cells(
-    corpus: DataFrame,
-    threshold: float = 0.9,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_pivots: int = 4,
-    eps: float = 1e-6,
-    max_cell_size: int | None = None,
-) -> DataFrame:
-    """Accounting companion to
-    ``banded_neardup_pairs(max_cell_size=N)`` — the (b1, b2) band
-    cells the capped run skipped, as (b1, b2, n_members) where
-    n_members counts replicated members meeting in that cell.
-    Mirrors ``lsh_dropped_buckets`` / ``simhash_dropped_blocks``:
-    ``.count()`` it (or aggregate n_members) for the drop metric a
-    production near-dup job logs next to its pair count."""
-    repl, _ = _banded_replicas(
-        corpus, threshold, dim, id_col, vec_col, n_pivots, eps
-    )
-    grouped = repl.groupBy("b1", "b2").agg(F.count("*").alias("n_members"))
-    if max_cell_size is None:
-        return grouped.filter(F.lit(False))
-    return grouped.filter(F.col("n_members") > max_cell_size)
 
 
 def quantize_embeddings(
@@ -849,9 +639,9 @@ def _cluster_assign_expr(
 ) -> Column:
     """Index of the cosine-nearest centroid (centroids enter the plan
     as broadcast literals; the dot against each literal centroid takes
-    ``_dot_sql``'s zip_with fold form — the unroll/seqfold codegen
-    variants apply only to column-vs-column dots, see the literal-
-    vector rationale in ``_dot_sql``).  Ties on the rounded score go
+    ``_dot_sql``'s zip_with fold form — the fixed-dimension fold
+    applies only to column-vs-column dots, see the literal-vector
+    rationale in ``_dot_sql``).  Ties on the rounded score go
     to the SMALLEST centroid index — encoded as array_max over
     (cos, -index) structs so one lexicographic max does both."""
     scored = F.array(

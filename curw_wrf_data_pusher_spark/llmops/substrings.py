@@ -174,8 +174,8 @@ def winnow_dropped_groups(
     """Accounting companion to
     ``winnow_candidate_pairs(max_group_size=N)``: the fingerprint
     posting lists the capped run skipped, as (fp, n_members).  Mirrors
-    ``lsh_dropped_buckets`` / ``simhash_dropped_blocks`` /
-    ``neardup_dropped_cells`` — capped drops are logged, not silent."""
+    ``lsh_dropped_buckets`` / ``simhash_dropped_blocks`` — capped drops
+    are logged, not silent."""
     grouped = (
         fp_df.select(F.col(id_col), F.col("fp"))
         .distinct()

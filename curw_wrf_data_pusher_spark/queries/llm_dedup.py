@@ -456,16 +456,14 @@ def llm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Embedding-cosine near-duplicate pairs: vectors whose cosine clears a
 # high threshold are near-dups (the embedding-space analogue of
-# MinHash). The REGISTERED plan is the pivot-angle-banded equi-join
-# (exact by the triangle inequality — identical rows to all-pairs,
-# pinned by tests/test_llmops.py); neardup_pairs keeps the O(n²)
-# broadcast form as the unregistered test oracle.
+# MinHash). neardup_pairs is the exact id-blocked self-join: a
+# shuffled hash join on equal-sized block pairs, never a broadcast.
 # Driver-gated through llm_cosine_topk_neardup (compound row).
 def llm_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llmops.simsearch import banded_neardup_pairs
+    from ..llmops.simsearch import neardup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return banded_neardup_pairs(emb, threshold=0.35, dim=64)
+    return neardup_pairs(emb, threshold=0.35)
 
 
 # Cosine compound driver row: exact top-k search and threshold

@@ -650,39 +650,69 @@ def test_dedup_clusters_query_not_single_task(spark, sf_dir):
     assert "SortAggregate" not in plan
 
 
-def test_banded_neardup_equals_allpairs(spark, sf_dir):
-    """Pivot-angle banding is EXACT (triangle inequality on the
-    sphere): the banded equi-join must reproduce the O(n²) broadcast
-    inequality self-join pair-for-pair, cos values included — at the
-    registered driver threshold and a tighter one."""
-    from curw_wrf_data_pusher_spark.llmops.simsearch import (
-        banded_neardup_pairs,
-        neardup_pairs,
+def _cosine_pairs_reference(rows):
+    """Plain-Python twin of ``neardup_pairs`` at threshold -inf: every
+    pair id_a < id_b with its cosine — left-fold dot from 0.0 in double
+    precision, correctly rounded sqrt, then Decimal ROUND_HALF_UP at
+    9 dp over the double's shortest repr (what Spark's ``round``
+    does).  Sorted, so a duplicated pair shows."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def dot(u, v):
+        s = 0.0
+        for x, y in zip(u, v):
+            s += float(x) * float(y)
+        return s
+
+    rows = sorted(rows)
+    norms = [math.sqrt(dot(v, v)) for _, v in rows]
+    out = []
+    for i, (ia, va) in enumerate(rows):
+        for j in range(i + 1, len(rows)):
+            ib, vb = rows[j]
+            c = dot(va, vb) / (norms[i] * norms[j])
+            c = float(Decimal(repr(c)).quantize(Decimal("1e-9"),
+                                                ROUND_HALF_UP))
+            if ia < ib:
+                out.append((ia, ib, c))
+    return sorted(out)
+
+
+def _clearing(pairs, threshold):
+    """The pairs whose cos clears ``threshold``."""
+    return [p for p in pairs if p[2] >= threshold]
+
+
+def _neardup_sorted(emb, threshold):
+    from curw_wrf_data_pusher_spark.llmops.simsearch import neardup_pairs
+
+    return sorted(
+        (r.id_a, r.id_b, r.cos)
+        for r in neardup_pairs(emb, threshold=threshold).collect()
     )
 
+
+def test_neardup_pairs_equals_python_reference(spark, sf_dir):
+    """The id-blocked self-join reproduces the plain-Python all-pairs
+    reference pair-for-pair, cos values included, each pair once — at
+    the registered threshold and a tighter one."""
     emb = load_table(spark, sf_dir, "embeddings")
+    ref = _cosine_pairs_reference(
+        [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    )
     for thr in (0.35, 0.5):
-        brute = {
-            (r.id_a, r.id_b, r.cos)
-            for r in neardup_pairs(emb, threshold=thr).collect()
-        }
-        banded = {
-            (r.id_a, r.id_b, r.cos)
-            for r in banded_neardup_pairs(emb, threshold=thr, dim=64).collect()
-        }
-        assert banded == brute
-    # non-vacuous at the registered threshold: the corpus has near-dups
-    assert len(
-        banded_neardup_pairs(emb, threshold=0.35, dim=64).take(1)
-    ) == 1
+        got = _neardup_sorted(emb, thr)
+        assert got == _clearing(ref, thr)
+        # non-vacuous: the corpus has near-dups at both thresholds
+        assert got
 
 
 def test_embedding_neardup_query_has_no_nested_loop_join(spark, sf_dir):
-    """The registered embedding near-dup plan must be the banded
-    equi-join — no BroadcastNestedLoopJoin / CartesianProduct (the
-    all-pairs form survives only as the unregistered test oracle).
-    The compound row's topk branch deliberately broadcasts the tiny
-    query side, so the gate targets the neardup branch."""
+    """The registered embedding near-dup plan must be the block-key
+    equi-join — no BroadcastNestedLoopJoin / CartesianProduct.  The
+    compound row's topk branch deliberately broadcasts the tiny query
+    side, so the gate targets the neardup branch."""
     from curw_wrf_data_pusher_spark.queries.llm_dedup import llm_embedding_neardup
 
     from .test_plans_quality import plan_of
@@ -692,106 +722,33 @@ def test_embedding_neardup_query_has_no_nested_loop_join(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_banded_neardup_hot_cell_cap(spark):
-    """A template cluster of near-identical embeddings lands every
-    member in the same (b1, b2) band cells; max_cell_size must drop
-    those cells before the |cell|² equi-join while keeping pairs in
-    small cells, with the skipped cells reported by
-    neardup_dropped_cells.  Default None keeps exact semantics
-    (identical rows to the uncapped run)."""
-    from curw_wrf_data_pusher_spark.llmops.simsearch import (
-        banded_neardup_pairs,
-        neardup_dropped_cells,
-    )
-
-    dim = 8
-    rows = []
-    # 30-copy template: e0 plus a tiny per-member e1 perturbation
-    for i in range(30):
-        v = [0.0] * dim
-        v[0] = 1.0
-        v[1] = 1e-6 * (i + 1)
-        rows.append((i, v))
-    # one distinct near-dup pair pointing the opposite way — its pivot
-    # angles sit ~pi away from the template's, so its band cells never
-    # collide with the template cells
-    for j, scale in ((200, 0.0100), (201, 0.0102)):
-        w = [0.0] * dim
-        w[0] = -1.0
-        w[2] = scale
-        rows.append((j, w))
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-
-    kw = dict(threshold=0.95, dim=dim, id_col="vec_id",
-              vec_col="embedding")
-    uncapped = {
-        (r.id_a, r.id_b)
-        for r in banded_neardup_pairs(emb, **kw).collect()
-    }
-    # template expands C(30,2) pairs + the one distinct pair
-    assert len(uncapped) == 435 + 1 and (200, 201) in uncapped
-
-    # None cap is byte-identical to the plain call (registered-row
-    # hash safety)
-    nonecap = {
-        (r.id_a, r.id_b)
-        for r in banded_neardup_pairs(
-            emb, max_cell_size=None, **kw
-        ).collect()
-    }
-    assert nonecap == uncapped
-
-    capped = {
-        (r.id_a, r.id_b)
-        for r in banded_neardup_pairs(
-            emb, max_cell_size=10, **kw
-        ).collect()
-    }
-    assert capped == {(200, 201)}  # template dropped, small pair kept
-
-    # accounting: the template's 4 replicated cells reported with the
-    # full member count (one also holds 2 replicas of the pair — a
-    # non-meeting cell for it, so the pair still survives above); the
-    # pair's own meeting cell is not reported
-    dropped = neardup_dropped_cells(
-        emb, max_cell_size=10, **kw
-    ).collect()
-    assert sorted(r.n_members for r in dropped) == [30, 30, 30, 32]
-    assert neardup_dropped_cells(
-        emb, max_cell_size=None, **kw
-    ).count() == 0
-
-
-def test_banded_neardup_join_is_shuffled_equi_join(spark, sf_dir):
-    """Skew posture of the registered near-dup branch: the candidate
-    join must be a SHUFFLED equi-join on the band cells (sort-merge or
-    shuffled-hash — the shape AQE's skew-join splitting can act on),
-    and the session must have AQE skew-join enabled so a hot (b1, b2)
-    cell splits across tasks at runtime.  Interplay with
-    max_cell_size: AQE bounds the per-task straggle of a hot cell,
-    the cap bounds the intrinsic |cell|² pair count itself — a
-    production job wants both."""
+def test_neardup_block_join_is_shuffled_hash_join(spark, sf_dir):
+    """The registered near-dup branch joins on the (ki, kj) block keys
+    with exactly one SHUFFLED hash join, never a broadcast: the
+    replicated side sits above a Generate, whose size estimate stays
+    small at any scale, so a planner-chosen broadcast would be the
+    shape that ran out of memory at 100x.  Both sides are repartitioned
+    to the nb(nb+1)/2 block pairs with an explicit count, which AQE
+    never coalesces into a few tasks."""
     from curw_wrf_data_pusher_spark.queries.llm_dedup import llm_embedding_neardup
 
     from .test_plans_quality import plan_of
 
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert (
-        spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-    )
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nb = 1
+    while nb * (nb + 1) // 2 < parts:
+        nb += 1
     plan = plan_of(llm_embedding_neardup(spark, sf_dir))
-    # equi-join on the band cells, any hash flavor: at test SF the
-    # replicated side fits under autoBroadcastJoinThreshold so
-    # Catalyst picks BroadcastHashJoin; at scale the same logical plan
-    # becomes SortMergeJoin/ShuffledHashJoin, where the skew conf
-    # applies.  A BNLJ/CartesianProduct here would mean the band keys
-    # were lost (gated separately above).
-    assert any(
-        j in plan
-        for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+    block_joins = [
+        node for node, keys in _join_keys(plan)
+        if re.fullmatch(r"\[ki#\d+L, kj#\d+L\]", keys)
+    ]
+    assert block_joins == ["ShuffledHashJoin"]
+    exchanges = re.findall(
+        r"hashpartitioning\(ki#\d+L, kj#\d+L, (\d+)\), REPARTITION_BY_NUM",
+        plan,
     )
+    assert exchanges == [str(nb * (nb + 1) // 2)] * 2
 
 
 def test_simhash_hot_block_cap(spark):
@@ -880,18 +837,14 @@ def test_estimated_jaccard_from_signatures(spark):
     assert abs(est[(1, 3)] - exact[(1, 3)]) <= 0.45  # k=8 resolution
 
 
-def test_banded_neardup_property_random_vectors(spark):
+def test_neardup_pairs_property_random_vectors(spark):
     """Property check on adversarial-ish inputs: random-signed vectors,
     negative components, near-parallel and antipodal pairs, thresholds
-    spanning negative to extreme — banded must equal all-pairs on every
-    combination (exactness is structural, not data-dependent)."""
-    import math
+    spanning negative to extreme — the blocked join must equal the
+    plain-Python reference on every combination.  A second corpus is a
+    30-member template cluster (every member in one direction) plus an
+    opposite near-dup pair: all C(30,2) + 1 pairs come back, uncapped."""
     import random
-
-    from curw_wrf_data_pusher_spark.llmops.simsearch import (
-        banded_neardup_pairs,
-        neardup_pairs,
-    )
 
     rng = random.Random(7)
     dim = 8
@@ -903,24 +856,34 @@ def test_banded_neardup_property_random_vectors(spark):
     rows.append((101, [-v for v in rows[1][1]]))
     rows.append((102, [v + 1e-4 for v in rows[2][1]]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ref = _cosine_pairs_reference(rows)
     for thr in (-0.5, 0.0, 0.7, 0.999999):
-        brute = {
-            (r.id_a, r.id_b, r.cos)
-            for r in neardup_pairs(emb, threshold=thr).collect()
-        }
-        banded = {
-            (r.id_a, r.id_b, r.cos)
-            for r in banded_neardup_pairs(
-                emb, threshold=thr, dim=dim
-            ).collect()
-        }
-        assert banded == brute, f"mismatch at threshold {thr}"
+        assert _neardup_sorted(emb, thr) == _clearing(ref, thr), (
+            f"mismatch at threshold {thr}"
+        )
     # the planted pairs actually show up where they should
-    high = {
-        (r.id_a, r.id_b)
-        for r in banded_neardup_pairs(emb, threshold=0.999, dim=dim).collect()
-    }
+    high = {(a, b) for a, b, _ in _neardup_sorted(emb, 0.999)}
     assert (0, 100) in high and (2, 102) in high and (1, 101) not in high
+
+    template = []
+    # 30-copy template: e0 plus a tiny per-member e1 perturbation
+    for i in range(30):
+        v = [0.0] * dim
+        v[0] = 1.0
+        v[1] = 1e-6 * (i + 1)
+        template.append((i, v))
+    # one distinct near-dup pair pointing the opposite way
+    for j, scale in ((200, 0.0100), (201, 0.0102)):
+        w = [0.0] * dim
+        w[0] = -1.0
+        w[2] = scale
+        template.append((j, w))
+    emb = spark.createDataFrame(
+        template, "vec_id long, embedding array<double>"
+    )
+    got = _neardup_sorted(emb, 0.95)
+    assert got == _clearing(_cosine_pairs_reference(template), 0.95)
+    assert len(got) == 435 + 1 and (200, 201) in {(a, b) for a, b, _ in got}
 
 
 def test_duplicated_line_stats(spark):

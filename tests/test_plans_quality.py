@@ -9,14 +9,15 @@ codegen breaks), they fail even though results stay correct.
 
 from __future__ import annotations
 
+import json
+import re
+from collections import namedtuple
+
 import pytest
 from pyspark.sql import functions as F
 
 from curw_wrf_data_pusher_spark.queries import QUERIES
 from curw_wrf_data_pusher_spark.sources.lake import load_table
-
-
-import re
 
 
 def plan_of(df, execute: bool = False) -> str:
@@ -32,6 +33,24 @@ def plan_of(df, execute: bool = False) -> str:
 def count_nodes(plan: str, node: str) -> int:
     # formatted plans list every operator once as "(N) NodeName"
     return len(re.findall(rf"^\(\d+\) {node}", plan, flags=re.M))
+
+
+RegistryPlan = namedtuple("RegistryPlan", "nodes optimized physical")
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir) -> dict[str, RegistryPlan]:
+    """Every registered query built ONCE, in name order, for the
+    registry-wide gates below: its optimized logical plan as parsed
+    JSON nodes and as a string, and its formatted physical plan."""
+    plans = {}
+    for name, fn in sorted(QUERIES.items()):
+        df = fn(spark, sf_dir)
+        opt = df._jdf.queryExecution().optimizedPlan()
+        plans[name] = RegistryPlan(
+            json.loads(opt.toJSON()), opt.toString(), plan_of(df)
+        )
+    return plans
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -168,7 +187,7 @@ def test_ivf_topk_probed_lists_join_broadcasts_queries(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_no_unbounded_global_windows_in_registered_queries(spark, sf_dir):
+def test_no_unbounded_global_windows_in_registered_queries(registry_plans):
     """CI gate for fact-scale partition-less windows: a Window with an
     empty partitionSpec moves ALL rows to one partition — acceptable
     only on bounded-cardinality inputs.  Every registered query's
@@ -198,8 +217,6 @@ def test_no_unbounded_global_windows_in_registered_queries(spark, sf_dir):
       salt-partitioned phase 1), and the union re-rank in kmv_jaccard
       sees ≤ 2k sketch rows.
     """
-    import json
-
     bounded_ok = {
         "a9_o1_percentiles_ranked",
         "e2_rfield_contract",
@@ -208,13 +225,10 @@ def test_no_unbounded_global_windows_in_registered_queries(spark, sf_dir):
         "w12_concurrency",
     }
     offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        nodes = json.loads(
-            fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toJSON()
-        )
+    for name, plans in registry_plans.items():
         n_global = sum(
             1
-            for n in nodes
+            for n in plans.nodes
             if n.get("class", "").endswith(".Window")
             and not n.get("partitionSpec")
         )
@@ -230,7 +244,7 @@ def test_no_unbounded_global_windows_in_registered_queries(spark, sf_dir):
     assert set(offenders) == bounded_ok
 
 
-def test_no_quadratic_window_frames_in_registered_queries(spark, sf_dir):
+def test_no_quadratic_window_frames_in_registered_queries(registry_plans):
     """CI gate for O(n²) window frames (round-10 judge finding): a frame
     ending at UNBOUNDED FOLLOWING whose start is NOT unbounded executes
     via Spark's UnboundedFollowingWindowFunctionFrame, which re-evaluates
@@ -247,10 +261,9 @@ def test_no_quadratic_window_frames_in_registered_queries(spark, sf_dir):
         r"unboundedfollowing\$\(\)"
     )
     offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        s = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    for name, plans in registry_plans.items():
         hits = [
-            lo for lo in pat.findall(s)
+            lo for lo in pat.findall(plans.optimized)
             if not lo.startswith("unboundedpreceding")
         ]
         if hits:
@@ -261,7 +274,7 @@ def test_no_quadratic_window_frames_in_registered_queries(spark, sf_dir):
     )
 
 
-def test_no_unbounded_broadcast_hints_in_registered_queries(spark, sf_dir):
+def test_no_unbounded_broadcast_hints_in_registered_queries(registry_plans):
     """CI gate for corpus-cardinality broadcast hints (round-6 judge
     top-next): an explicit ``F.broadcast`` on a frame whose row count
     grows with the data pins a plan that OOMs executors at 100 TB and
@@ -353,9 +366,10 @@ def test_no_unbounded_broadcast_hints_in_registered_queries(spark, sf_dir):
         "w14_cusum_changepoint": 1,
     }
     offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        s = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
-        n = len(re.findall(r"(?:left|right)Hint=\(strategy=broadcast", s))
+    for name, plans in registry_plans.items():
+        n = len(re.findall(
+            r"(?:left|right)Hint=\(strategy=broadcast", plans.optimized
+        ))
         if n:
             offenders[name] = n
     assert offenders == hint_ok, (
@@ -367,7 +381,7 @@ def test_no_unbounded_broadcast_hints_in_registered_queries(spark, sf_dir):
 
 
 def test_no_unreviewed_nested_loop_joins_in_registered_queries(
-    spark, sf_dir
+    registry_plans,
 ):
     """CI gate for accidental cross products: every registered query's
     PHYSICAL plan is walked; CartesianProduct fails unconditionally,
@@ -435,10 +449,9 @@ def test_no_unreviewed_nested_loop_joins_in_registered_queries(
         "w14_cusum_changepoint": 1,
     }
     offenders, cartesians = {}, {}
-    for name, fn in sorted(QUERIES.items()):
-        plan = plan_of(fn(spark, sf_dir))
-        bnl = count_nodes(plan, "BroadcastNestedLoopJoin")
-        cart = count_nodes(plan, "CartesianProduct")
+    for name, plans in registry_plans.items():
+        bnl = count_nodes(plans.physical, "BroadcastNestedLoopJoin")
+        cart = count_nodes(plans.physical, "CartesianProduct")
         if cart:
             cartesians[name] = cart
         if bnl:
