@@ -11,7 +11,8 @@ Two sinks:
 - ``upsert_parquet``: lake-native MERGE emulation — new rows win on the
   key; everything else is carried over.  Used for all local testing and
   as the scale path when the store is the lake itself (at 100 TB the
-  anti-join is partition-pruned by the key's partition columns).
+  anti-join is partition-pruned by the key's partition columns).  Each
+  merge is written once and its row count observed in the write's plan.
 - ``upsert_jdbc``: ``foreachPartition`` batched MySQL upsert with retry,
   matching the reference's sink exactly.  Import-gated (no MySQL driver
   or server in this container); the SQL builder is pure and unit-tested.
@@ -23,7 +24,7 @@ import functools
 import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -43,8 +44,8 @@ def upsert_parquet(
 ) -> int:
     """Idempotent MERGE into a parquet store: rows whose key matches an
     incoming row are replaced; others survive.  Returns the number of
-    rows written (for the unpartitioned full-store form this equals the
-    post-merge row count).
+    rows written, observed in-plan (for the unpartitioned full-store
+    form this equals the post-merge row count).
 
     ``new_rows`` is evaluated by several actions (the touched-partition
     collect and both branches of the merge), so a caller whose lineage
@@ -55,51 +56,52 @@ def upsert_parquet(
     - ``partition_cols`` given (the 100 TB path): the merge touches ONLY
       the partitions present in ``new_rows``.  The touched-partition
       predicate is collected driver-side (bounded by partitions-per-push,
-      not store size) so Catalyst prunes the scan at planning time; the
-      write uses dynamic partition overwrite, replacing exactly the
-      touched partition directories and never listing, reading, or
-      rewriting the rest.  REQUIRES the partition columns to be a
-      function of the key (a key's row always lives in one partition) —
-      true for the reference's layout where fgt/date derive from the
-      series key + run (SURVEY §1.4, wrf_data_pusher.py:119-140).
+      not store size) so Catalyst prunes the scan at planning time: the
+      file index lists the whole store tree, but only touched files are
+      read.  ONE write, by dynamic partition overwrite straight into the
+      store: Spark's commit stages task output in
+      ``<path>/.spark-staging-<job>`` and, after every task has read
+      the old files, swaps in exactly the touched partition
+      directories; the rest is never rewritten.  REQUIRES the partition
+      columns to be a function of the key (a key's row always lives in
+      one partition) — true for the reference's layout where fgt/date
+      derive from the series key + run (SURVEY §1.4,
+      wrf_data_pusher.py:119-140).
     - no ``partition_cols``: full-store merge.  The merged result is
       staged to ``<path>.staging`` and swapped in by filesystem RENAME
       (store → .old, staging → store, delete .old), so a failure at any
       point leaves either the old or the new store fully intact — never
-      the half-deleted state a second overwrite-write would risk.
+      the half-deleted state a second overwrite-write would risk (a
+      failed staging write deletes its partial copy).
     """
     from pyspark.errors import AnalysisException
 
     from ..functions.errors import is_missing_input
 
+    # The scoped merge is only sound when the store really is laid out
+    # as <col>=<value> directories for these columns: against a flat
+    # store the touched-partition filter would match nothing, the
+    # anti-join would drop nothing, and dynamic overwrite would write
+    # partition dirs BESIDE the old flat files — duplicate keys, silent
+    # corruption.  A flat (or mixed) store falls back to the full-store
+    # merge below, which also migrates it to the partitioned layout.
+    if partition_cols and _store_is_partitioned_by(
+        spark, store_path, list(partition_cols)
+    ):
+        return _upsert_partitioned(
+            spark, new_rows, store_path, keys, list(partition_cols)
+        )
+
     try:
         existing = spark.read.parquet(store_path)
-        has_existing = True
     except AnalysisException as exc:
         # ONLY "no store yet" (missing/empty path) may start a fresh
         # store; a transient read failure on an EXISTING store must
-        # propagate — swallowing it would stage `new_rows` alone and
-        # rename it over months of history (the swallow-everything
-        # anti-pattern functions/errors.py exists to eliminate)
+        # propagate — swallowing it would write `new_rows` alone over
+        # months of history (the swallow-everything anti-pattern
+        # functions/errors.py exists to eliminate)
         if not is_missing_input(exc, allow_empty=True):
             raise
-        has_existing = False
-
-    if has_existing and partition_cols:
-        # The scoped merge is only sound when the store really is laid
-        # out as <col>=<value> directories for these columns: against a
-        # flat store the touched-partition filter would match nothing,
-        # the anti-join would drop nothing, and dynamic overwrite would
-        # write partition dirs BESIDE the old flat files — duplicate
-        # keys, silent corruption.  A flat (or mixed) store falls back
-        # to the full-store merge below, which also migrates it to the
-        # partitioned layout.
-        if _store_is_partitioned_by(spark, store_path, list(partition_cols)):
-            return _upsert_partitioned(
-                spark, new_rows, store_path, keys, list(partition_cols)
-            )
-
-    if not has_existing:
         # First-write fast path: a fresh store has nothing to merge
         # and nothing to lose to a non-atomic write — write the batch
         # directly and skip the staging+rename roundtrip (at 10k
@@ -113,30 +115,37 @@ def upsert_parquet(
         return spark.read.parquet(store_path).count()
 
     kept = existing.join(
-        new_rows.select(*keys).dropDuplicates(list(keys)),
+        new_rows.select(*keys),
         on=list(keys),
         how="left_anti",
     )
-    merged = kept.unionByName(new_rows)
-
+    merged, written = _observe_rows(kept.unionByName(new_rows))
     staging = store_path.rstrip("/") + ".staging"
-    if partition_cols:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            staging
-        )
-    else:
-        merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-
     fs, store_p, jvm = _hadoop_fs(spark, store_path)
     staging_p = jvm.org.apache.hadoop.fs.Path(staging)
     old_p = jvm.org.apache.hadoop.fs.Path(store_path.rstrip("/") + ".old")
+    writer = merged.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    try:
+        writer.parquet(staging)
+    except BaseException:
+        fs.delete(staging_p, True)
+        raise
     if fs.exists(old_p):
         fs.delete(old_p, True)
     fs.rename(store_p, old_p)
     fs.rename(staging_p, store_p)
     fs.delete(old_p, True)
-    return n
+    return written()
+
+
+def _observe_rows(df: DataFrame):
+    """``df`` with an in-plan row counter, and a getter to call once
+    the returned frame has been written."""
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    return counted, lambda: int(obs.get["rows"])
 
 
 def _store_is_partitioned_by(
@@ -157,6 +166,8 @@ def _store_is_partitioned_by(
     the same mixed-layout duplicate-key corruption this guard exists
     to prevent, one level deeper."""
     fs, root, _ = _hadoop_fs(spark, store_path)
+    if not fs.exists(root):
+        return False
     current = root
     for col in partition_cols:
         prefix = col + "="
@@ -222,7 +233,8 @@ def _upsert_partitioned(
     partition_cols: list[str],
 ) -> int:
     """Partition-scoped merge: read only touched partitions, anti-join
-    on the key, dynamic-partition-overwrite only those partitions."""
+    on the key, dynamic-partition-overwrite only those partitions in
+    one write (the commit swaps them in after every task has read)."""
     # Touched-partition predicate, collected driver-side.  The row
     # count is the number of distinct partition tuples in one push —
     # dims-scale at worst (a store-bootstrapping batch touches every
@@ -234,7 +246,7 @@ def _upsert_partitioned(
     if not touched:
         return 0
     pred = _touched_predicate(partition_cols, touched)
-    # Partition-pruned scan: only the touched directories are listed/read.
+    # Partition-pruned scan: only the touched files are read.
     # Explicit schema: partition-column TYPES come from the incoming
     # frame, not directory-name inference (a string partition value that
     # looks like a timestamp must stay a string for the key anti-join).
@@ -242,34 +254,17 @@ def _upsert_partitioned(
         spark.read.schema(new_rows.schema).parquet(store_path).filter(pred)
     )
     kept = existing_touched.join(
-        new_rows.select(*keys).dropDuplicates(list(keys)),
+        new_rows.select(*keys),
         on=list(keys),
         how="left_anti",
     )
-    merged = kept.unionByName(new_rows)
-
-    # Stage the merged touched data (new files — no self-overwrite
-    # hazard while the plan still reads the store), then re-read and
-    # dynamic-overwrite into the store: only directories for partition
-    # values present in the staged data are replaced.  Both writes are
-    # proportional to the TOUCHED data, not the store.
-    staging = store_path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-        staging
-    )
-    staged = spark.read.schema(merged.schema).parquet(staging)
-    n = staged.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        staged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            store_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    fs, staging_p, _ = _hadoop_fs(spark, staging)
-    fs.delete(staging_p, True)
-    return n
+    merged, written = _observe_rows(kept.unionByName(new_rows))
+    # writer option, not the shared session conf (which would put any
+    # concurrent query on the session in dynamic mode too)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(store_path)
+    return written()
 
 
 def build_mysql_upsert_sql(table: str, columns: Sequence[str],

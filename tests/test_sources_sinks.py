@@ -341,14 +341,17 @@ def test_upsert_jdbc_real_database_roundtrip(spark, tmp_path):
     assert v == sum(r[3] for r in rows2)
 
 
-def _partition_state(store: str, part: str) -> dict[str, bytes]:
-    """filename → bytes for every data file under one partition dir."""
+def _partition_state(store: str, part: str = "") -> dict[str, bytes]:
+    """relative path → bytes for every data file under one partition
+    dir, nested partition levels included (the whole store by default)."""
     d = os.path.join(store, part)
     out = {}
-    for f in sorted(os.listdir(d)):
-        if f.startswith(("part-", ".part-")) and not f.endswith(".crc"):
-            with open(os.path.join(d, f), "rb") as fh:
-                out[f] = fh.read()
+    for dirpath, _, names in os.walk(d):
+        for f in sorted(names):
+            if f.startswith(("part-", ".part-")) and not f.endswith(".crc"):
+                path = os.path.join(dirpath, f)
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, d)] = fh.read()
     return out
 
 
@@ -465,6 +468,191 @@ def test_upsert_parquet_swap_is_rename(spark, tmp_path):
     assert got == {"a": 1.0, "b": 20.0, "c": 3.0}
     assert not os.path.exists(store + ".staging")
     assert not os.path.exists(store + ".old")
+
+
+def _store_rows(spark, store: str) -> dict:
+    return {
+        (r["tms_id"], r["time"]): tuple(r)[2:]
+        for r in spark.read.parquet(store)
+        .select("tms_id", "time", "run_date", "wrf_system", "value")
+        .collect()
+    }
+
+
+_ROW_SCHEMA = (
+    "tms_id string, time string, run_date string, wrf_system string, "
+    "value double"
+)
+
+
+@pytest.mark.parametrize("partition_cols", [["run_date"], None])
+def test_upsert_parquet_failed_merge_leaves_store_intact(
+    spark, tmp_path, partition_cols
+):
+    """A merge whose write task fails must propagate the error and leave
+    the store exactly as it was, with no staging residue beside it
+    (``.staging``/``.old``) or inside it (``.spark-staging-*``)."""
+    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+
+    store = str(tmp_path / "store")
+    base = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 1.0), ("s2", "t1", "d2", "A", 2.0)],
+        _ROW_SCHEMA,
+    )
+    upsert_parquet(spark, base, store, keys=["tms_id", "time"],
+                   partition_cols=partition_cols)
+    files_before = _partition_state(store)
+    rows_before = _store_rows(spark, store)
+    push = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 10.0), ("bad", "t1", "d1", "A", 0.0)],
+        _ROW_SCHEMA,
+    ).withColumn(
+        "value",
+        F.when(F.col("tms_id") == "bad", F.raise_error(F.lit("boom")))
+        .otherwise(F.col("value")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        upsert_parquet(spark, push, store, keys=["tms_id", "time"],
+                       partition_cols=partition_cols)
+    assert _partition_state(store) == files_before
+    assert _store_rows(spark, store) == rows_before
+    assert not os.path.exists(store + ".staging")
+    assert not os.path.exists(store + ".old")
+    assert not [f for f in os.listdir(store) if f.startswith(".spark-staging")]
+
+
+def test_upsert_parquet_scoped_merge_leaves_session_conf(
+    spark, tmp_path, monkeypatch
+):
+    """The scoped merge passes dynamic overwrite as a writer option: it
+    never sets the shared session conf, which would switch every other
+    query on the session (a foreachBatch, a thread) to dynamic mode."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+
+    store = str(tmp_path / "store")
+    base = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 1.0), ("s2", "t1", "d2", "A", 2.0)],
+        _ROW_SCHEMA,
+    )
+    upsert_parquet(spark, base, store, keys=["tms_id", "time"],
+                   partition_cols=["run_date"])
+    push = spark.createDataFrame([("s1", "t1", "d1", "A", 10.0)], _ROW_SCHEMA)
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    assert upsert_parquet(spark, push, store, keys=["tms_id", "time"],
+                          partition_cols=["run_date"]) == 1
+    monkeypatch.undo()
+    assert sets == []
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    assert spark.conf.get(mode).lower() == "static"
+    assert _store_rows(spark, store) == {
+        ("s1", "t1"): ("d1", "A", 10.0), ("s2", "t1"): ("d2", "A", 2.0),
+    }
+
+
+def test_partition_scoped_upsert_writes_once(spark, tmp_path, monkeypatch):
+    """A scoped merge onto an existing store is one pruned store read
+    and one write, straight into the store; its returned count is the
+    touched partitions' rows as read back afterwards."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+
+    store = str(tmp_path / "store")
+    base = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 1.0), ("s1", "t2", "d1", "A", 2.0),
+         ("s2", "t1", "d2", "A", 3.0)],
+        _ROW_SCHEMA,
+    )
+    upsert_parquet(spark, base, store, keys=["tms_id", "time"],
+                   partition_cols=["run_date"])
+    push = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 10.0), ("s3", "t1", "d1", "A", 9.0)],
+        _ROW_SCHEMA,
+    )
+    writes, reads = [], []
+    real_write, real_read = DataFrameWriter.parquet, DataFrameReader.parquet
+
+    def write(self, path, *a, **kw):
+        writes.append(path)
+        return real_write(self, path, *a, **kw)
+
+    def read(self, *paths, **kw):
+        reads.extend(paths)
+        return real_read(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    monkeypatch.setattr(DataFrameReader, "parquet", read)
+    n = upsert_parquet(spark, push, store, keys=["tms_id", "time"],
+                       partition_cols=["run_date"])
+    monkeypatch.undo()
+    assert writes == [store]
+    assert reads == [store]
+    touched = spark.read.parquet(store).filter("run_date = 'd1'")
+    assert n == touched.count() == 3
+
+
+def test_upsert_parquet_two_level_partition_scoped(spark, tmp_path):
+    """A scoped merge over two partition columns replaces exactly the
+    touched leaf directories: every other leaf, including a sibling
+    under the same first-level directory, stays byte-identical."""
+    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+
+    store = str(tmp_path / "store")
+    parts = ["run_date", "wrf_system"]
+    base = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 1.0), ("s1", "t2", "d1", "A", 2.0),
+         ("s2", "t1", "d1", "C", 3.0), ("s3", "t1", "d2", "A", 4.0),
+         ("s4", "t1", "d2", "C", 5.0)],
+        _ROW_SCHEMA,
+    )
+    assert upsert_parquet(spark, base, store, keys=["tms_id", "time"],
+                          partition_cols=parts) == 5
+    leaf = {
+        (d, w): f"run_date={d}/wrf_system={w}"
+        for d in ("d1", "d2") for w in ("A", "C")
+    }
+    before = {k: _partition_state(store, v) for k, v in leaf.items()}
+
+    # touch only (d1, A): replace (s1,t1), add (s5,t1)
+    push = spark.createDataFrame(
+        [("s1", "t1", "d1", "A", 10.0), ("s5", "t1", "d1", "A", 6.0)],
+        _ROW_SCHEMA,
+    )
+    for _ in range(2):  # the repeat is idempotent
+        assert upsert_parquet(spark, push, store, keys=["tms_id", "time"],
+                              partition_cols=parts) == 3
+        for k in [("d1", "C"), ("d2", "A"), ("d2", "C")]:
+            assert _partition_state(store, leaf[k]) == before[k]
+        assert _partition_state(store, leaf["d1", "A"]) != before["d1", "A"]
+        assert _store_rows(spark, store) == {
+            ("s1", "t1"): ("d1", "A", 10.0), ("s1", "t2"): ("d1", "A", 2.0),
+            ("s5", "t1"): ("d1", "A", 6.0), ("s2", "t1"): ("d1", "C", 3.0),
+            ("s3", "t1"): ("d2", "A", 4.0), ("s4", "t1"): ("d2", "C", 5.0),
+        }
+
+    # three touched leaves (an odd OR tree); (d1, C) stays untouched
+    push3 = spark.createDataFrame(
+        [("s1", "t2", "d1", "A", 20.0), ("s3", "t1", "d2", "A", 40.0),
+         ("s4", "t1", "d2", "C", 50.0)],
+        _ROW_SCHEMA,
+    )
+    assert upsert_parquet(spark, push3, store, keys=["tms_id", "time"],
+                          partition_cols=parts) == 5
+    assert _partition_state(store, leaf["d1", "C"]) == before["d1", "C"]
+    assert _store_rows(spark, store) == {
+        ("s1", "t1"): ("d1", "A", 10.0), ("s1", "t2"): ("d1", "A", 20.0),
+        ("s5", "t1"): ("d1", "A", 6.0), ("s2", "t1"): ("d1", "C", 3.0),
+        ("s3", "t1"): ("d2", "A", 40.0), ("s4", "t1"): ("d2", "C", 50.0),
+    }
 
 
 def test_load_table_memo_sees_rewritten_files(spark, tmp_path):
