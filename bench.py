@@ -280,21 +280,10 @@ def _build_full_d03(path: str, writer_factory) -> None:
     w.close()
 
 
-def _ingest_full_d03(spark, cache_name: str, writer_factory) -> None:
-    """Round-15 change (VERDICT r14 item 3, guide §6 I/O parallelism):
-    the full-file rows now RIDE THE SPLIT-SLAB READER.  Until r14 they
-    decoded each file in ONE task via ``read_wrf_grid`` — at 289
-    timesteps that pinned a single core (and one Python worker
-    shipping every row) for the whole 4.6M-cell decode, which made the
-    pair the largest bench mass (6.8 + 4.0 s) measuring nothing the
-    split rows don't.  The split reader is row-identical (pinned by
-    tests/test_netcdf_split.py equality against read_wrf_grid); these
-    rows keep their names and their meaning — full operational-size
-    ingest through the pure-Python codecs — with the production task
-    layout.  ``splits_per_file=None`` derives the slab count from
-    ``defaultParallelism`` (honours $SPARK_GRAFT_CPUS, so the
-    driver's low-core scaling run measures a real layout, not a
-    32-slab constant); the _split twins keep their pinned 32."""
+def _ingest_d03(spark, cache_name: str, writer_factory) -> None:
+    """Full operational-size ingest (289 timesteps) through
+    ``read_wrf_grid`` and the pure-Python codecs, to the noop sink.
+    The first rep builds the cached file."""
     import os
     import tempfile
 
@@ -303,93 +292,43 @@ def _ingest_full_d03(spark, cache_name: str, writer_factory) -> None:
     if not os.path.exists(f):
         _build_full_d03(f, writer_factory)
 
-    from curw_wrf_data_pusher_spark.sources.netcdf import (
-        read_wrf_grid_split,
-    )
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
 
-    df = read_wrf_grid_split(
+    df = read_wrf_grid(
         spark, base,
         bbox={"lat_min": -90, "lat_max": 90,
               "lon_min": -180, "lon_max": 180},
-        splits_per_file=None,
     )
     df.write.format("noop").mode("overwrite").save()
 
 
-def _bench_s1_ingest_full_d03(spark, sf_dir: str) -> None:
-    """S1 ingest at the reference's FULL operational size through the
-    pure-numpy CLASSIC codec (first rep builds the cached file;
-    best-of-REPS reports the standing ingest cost)."""
+def _bench_s1_ingest_d03(spark, sf_dir: str) -> None:
+    """S1 ingest through the pure-numpy CLASSIC codec."""
     from curw_wrf_data_pusher_spark.sources.netcdf3 import NetCDF3Writer
 
-    _ingest_full_d03(spark, "spark_graft_d03_full", NetCDF3Writer)
+    _ingest_d03(spark, "spark_graft_d03_full", NetCDF3Writer)
 
 
-def _bench_s1_ingest_full_d03_hdf5(spark, sf_dir: str) -> None:
+def _bench_s1_ingest_d03_hdf5(spark, sf_dir: str) -> None:
     """The HDF5 twin: the SAME grid stored netCDF-4-style (chunked
     slabs, shuffle+deflate via NC4Writer), decoded through the pure
     HDF5 reader — measures the zlib-inflate decode path the classic
     row doesn't touch."""
     from curw_wrf_data_pusher_spark.sources.hdf5 import create_nc4
 
-    _ingest_full_d03(spark, "spark_graft_d03_h5", create_nc4)
-
-
-def _ingest_split_d03(spark, cache_name: str, writer_factory) -> None:
-    import os
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), cache_name)
-    f = os.path.join(base, "wrfX", "d03_RAINNC.nc")
-    if not os.path.exists(f):
-        _build_full_d03(f, writer_factory)
-
-    from curw_wrf_data_pusher_spark.sources.netcdf import (
-        read_wrf_grid_split,
-    )
-
-    df = read_wrf_grid_split(
-        spark, base,
-        bbox={"lat_min": -90, "lat_max": 90,
-              "lon_min": -180, "lon_max": 180},
-        splits_per_file=32,
-    )
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _bench_s1_ingest_split_d03(spark, sf_dir: str) -> None:
-    """Intra-file parallel twin of wrf_s1_ingest_full_d03: 32 tasks
-    per file, each decoding one t-slab through the codecs' lazy
-    hyperslab path (measured r14: 8.3 s -> 0.9 s on this box — the
-    single-task row's intra-day single-core sensitivity is gone
-    because no task carries the whole file)."""
-    from curw_wrf_data_pusher_spark.sources.netcdf3 import NetCDF3Writer
-
-    _ingest_split_d03(spark, "spark_graft_d03_full", NetCDF3Writer)
-
-
-def _bench_s1_ingest_split_d03_hdf5(spark, sf_dir: str) -> None:
-    """HDF5 flavor of the split ingest: each slab inflates ONLY its
-    own (1, h, w) chunks — O(slab) zlib, not O(file)."""
-    from curw_wrf_data_pusher_spark.sources.hdf5 import create_nc4
-
-    _ingest_split_d03(spark, "spark_graft_d03_h5", create_nc4)
+    _ingest_d03(spark, "spark_graft_d03_h5", create_nc4)
 
 
 #: terminal-sink rows: the callable performs (and is timed over) its
 #: own write instead of the noop sink.
 SINKS = {
     "wrf_e2_rfield_files": _bench_rfield_files,
-    "wrf_s1_ingest_full_d03": _bench_s1_ingest_full_d03,
-    "wrf_s1_ingest_full_d03_hdf5": _bench_s1_ingest_full_d03_hdf5,
-    "wrf_s1_ingest_split_d03": _bench_s1_ingest_split_d03,
-    "wrf_s1_ingest_split_d03_hdf5": _bench_s1_ingest_split_d03_hdf5,
+    "wrf_s1_ingest_d03": _bench_s1_ingest_d03,
+    "wrf_s1_ingest_d03_hdf5": _bench_s1_ingest_d03_hdf5,
 }
 
-EXTENDED.append("wrf_s1_ingest_full_d03")
-EXTENDED.append("wrf_s1_ingest_full_d03_hdf5")
-EXTENDED.append("wrf_s1_ingest_split_d03")
-EXTENDED.append("wrf_s1_ingest_split_d03_hdf5")
+EXTENDED.append("wrf_s1_ingest_d03")
+EXTENDED.append("wrf_s1_ingest_d03_hdf5")
 
 
 def _parse_cpu_per_query(log_dir: str) -> dict[str, float]:

@@ -107,12 +107,12 @@ def upsert_parquet(
         # directly and skip the staging+rename roundtrip (at 10k
         # partitions the round-13 gauge-QC probe measured each extra
         # partitioned write as minutes of commit metadata).
-        writer = new_rows.write.mode("overwrite")
+        counted, written = _observe_rows(new_rows)
+        writer = counted.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(store_path)
-        # parquet-footer count of what was just committed
-        return spark.read.parquet(store_path).count()
+        return written()
 
     kept = existing.join(
         new_rows.select(*keys),

@@ -332,7 +332,7 @@ class HDF5Reader:
 
         def name_at(off):
             start = heap_data + off
-            # .find, not .index: mmap buffers (read_wrf_grid_split's
+            # .find, not .index: mmap buffers (read_wrf_grid's
             # range-read path) expose find() only
             end = buf.find(b"\x00", start)
             if end < 0:

@@ -12,19 +12,19 @@ Reference behavior reproduced (wrf_data_pusher.py:143-279):
   (wrf_data_pusher.py:181-189).
 
 Spark architecture: NetCDF files are not splittable and have no native
-Spark source, so parallelism is across FILES: ``binaryFile`` scan (one
-row per file, bytes + mtime) → ``mapInArrow`` opening each file
-in-memory and emitting long rows.  Filter/projection pushdown is
-option-driven (variable name, bbox, time slice are applied inside the
-reader before the hyperslab read).  At 100 TB (≈ thousands of daily
-.nc files), the file-level parallelism saturates any executor count;
-per-file output stays under a task's memory because the decode yields
-capped Arrow batches (``_ARROW_BATCH_ROWS``).  For FEW big files the
-intra-file route (``read_wrf_grid_split``) fans each file across N
-slab tasks instead.  The third route, the raw-``.nc`` stream
-(``streaming/file_stream.stream_wrf_nc_push``), reuses
-:func:`decode_grid_frame`; all three decode through
-:func:`decode_grid_arrow` → :func:`_grid_arrays`.
+Spark source, so the one batch route, :func:`read_wrf_grid`, lists the
+``*.nc`` files (a ``binaryFile`` listing, content pruned) and fans each
+file into time slabs, one ``mapInArrow`` task per (file, slab), each
+decoding its slab from the mmap'd local file.  Filter/projection
+pushdown is option-driven (variable name, bbox, time slice are applied
+inside the reader before the hyperslab read).  At 100 TB (≈ thousands
+of daily .nc files) the task count is capped and file-level
+parallelism saturates any executor count; per-task output stays under
+a task's memory because the decode yields capped Arrow batches
+(``_ARROW_BATCH_ROWS``).  The raw-``.nc`` stream
+(``streaming/file_stream.stream_wrf_nc_push``) runs each micro-batch's
+listing through the same :func:`decode_grid_slabs` stage; both decode
+through :func:`decode_grid_arrow` → :func:`_grid_arrays`.
 
 Codec resolution: ``netCDF4`` when installed (all formats); otherwise
 pure-numpy codecs decode real ``.nc`` bytes in-container, dispatched
@@ -102,30 +102,38 @@ def _default_open_dataset():
     return open_dataset
 
 
-def _local_file_buffer(path: str):
-    """Default ``open_bytes`` for :func:`read_wrf_grid_split`: map a
-    ``binaryFile``-style URI to a buffer the pure-Python codecs can
-    decode.  Local (``file:`` / bare) paths are memory-mapped, so a
-    slab decode only faults in the byte ranges its chunks/records
-    actually occupy — the OS does the range read.  Non-local
-    filesystems need an injected ``open_bytes`` (e.g. an fsspec
-    ``cat_file`` or a ranged object-store GET); executors read from
-    shared storage directly, never through the driver."""
-    import mmap
-
-    p = path
+def _local_path(uri: str) -> str:
+    """The local filesystem path of a listed ``file:`` (or bare) URI.
+    Any other scheme raises: every slab task opens its file from local
+    storage, and nothing reads bytes over a remote filesystem."""
+    p = uri
     if p.startswith("file:"):
         p = p[5:]
         while p.startswith("//"):  # file:///abs and file:/abs both appear
             p = p[1:]
     elif "://" in p:
-        raise ValueError(
-            "read_wrf_grid_split: no open_bytes given for non-local "
-            f"path {path!r}; pass open_bytes=fn(path)->bytes "
-            "(e.g. fsspec cat_file)"
-        )
-    with open(p, "rb") as f:
+        raise ValueError(f"read_wrf_grid reads local files only, not {uri!r}")
+    return p
+
+
+def _local_file_buffer(uri: str):
+    """Memory-map a listed local file, so a slab decode only faults in
+    the byte ranges its chunks/records actually occupy — the OS does
+    the range read."""
+    import mmap
+
+    with open(_local_path(uri), "rb") as f:
         return mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+
+
+def _slabs_per_file(spark: SparkSession) -> int:
+    """Time slabs per file: a slab per core of one executor wave,
+    capped at 32 (more just multiplies header parses).  Not derived
+    from file size: a one-slab read of one file plans a single
+    partition, which lets the E1 lag window skip its Exchange and run
+    in one task; and compressed HDF5 holds the same cells in a quarter
+    of the bytes, so bytes are a poor guide to decode work."""
+    return min(32, spark.sparkContext.defaultParallelism)
 
 
 def read_wrf_grid(
@@ -141,71 +149,25 @@ def read_wrf_grid(
 
     ``bbox`` (lat/lon min/max) and ``t_slice`` (start/end time index,
     end-exclusive) are pushed into the reader: the hyperslab slice
-    happens before any data leaves the C library, exactly like the
+    happens before any data leaves the codec, exactly like the
     reference's index-first read.
 
-    ``open_dataset``: injectable ``bytes -> dataset`` callable (default:
-    :func:`_default_open_dataset`).  The dataset only needs the surface
-    the decode uses — ``.variables`` with WRF-style slicing, attribute
-    access, ``.close()`` — so the whole decode logic (axis slicing, both
-    epoch encodings, bbox index contiguity, empty-bbox guard, mask fill)
-    is executable and tested against a stub dataset in this container;
-    only the C-library call itself stays environment-gated.
+    ``open_dataset``: injectable ``buffer -> dataset`` callable
+    (default: :func:`_default_open_dataset`).  The dataset only needs
+    the surface the decode uses — ``.variables`` with WRF-style
+    slicing, attribute access, ``.close()`` — so the whole decode logic
+    (axis slicing, both epoch encodings, bbox index contiguity,
+    empty-bbox guard, mask fill) is executable and tested against a
+    stub dataset in this container.
+
+    Paths must be local (``file:`` or bare); anything else raises
+    ``ValueError`` here on the driver.
     """
+    _local_path(path)
     # recursiveFileLookup: the reference's lake nests files under
     # {version}/{run}/{date}/{system}/ (wrf_data_pusher.py:321-327) —
     # without it a nested .nc is silently skipped (caught by
     # tests/test_netcdf_stub.py)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.nc")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "modificationTime", "content")
-    )
-    return decode_grid_frame(
-        files, bbox=bbox, variable=variable,
-        system_from_path=system_from_path, t_slice=t_slice,
-        open_dataset=open_dataset,
-    )
-
-
-def read_wrf_grid_split(
-    spark: SparkSession,
-    path: str,
-    bbox: dict | None = None,
-    variable: str = "RAINNC",
-    system_from_path: bool = True,
-    t_slice: tuple[int, int] | None = None,
-    splits_per_file: int | None = None,
-    open_dataset=None,
-    open_bytes=None,
-) -> DataFrame:
-    """INTRA-file parallel variant of :func:`read_wrf_grid`: each file
-    is decoded by ``splits_per_file`` tasks, task *k* reading only the
-    time slab ``[k*T/N, (k+1)*T/N)`` via the codecs' lazy hyperslab
-    path (chunked HDF5 inflates only the slab's chunks; classic reads
-    only the slab's records).
-
-    :func:`read_wrf_grid`'s one-task-per-file shape is right when the
-    file count saturates the cluster, but a single multi-GB ``.nc``
-    (or a last straggler file) pins one core AND one Python worker
-    shipping every row.  Splitting moves both the decode and the
-    Arrow transfer onto N workers.  Only the file LISTING goes through
-    ``binaryFile`` (content column pruned — no bytes are read or
-    shuffled); each task opens its file from shared storage via
-    ``open_bytes`` (default: mmap for local paths, so the OS range-
-    reads just the slab's bytes).  The per-slab decode is the same
-    :func:`_grid_arrays` core as every other route, so the outputs
-    cannot drift (pinned by tests/test_netcdf_split.py).
-
-    ``splits_per_file`` defaults to ``sparkContext.defaultParallelism``
-    capped at 32 (a slab per core on one executor wave; more just
-    multiplies header parses).
-    """
-    if splits_per_file is None:
-        splits_per_file = min(32, spark.sparkContext.defaultParallelism)
-    n_splits = max(1, int(splits_per_file))
     listing = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.nc")
@@ -213,28 +175,67 @@ def read_wrf_grid_split(
         .load(path)
         .select("path", "modificationTime")
     )
-    # metadata-only count (content pruned): sizes the repartition so
-    # every (file, slab) pair is its own task
-    n_files = listing.count()
+    # the file index's listing, no Spark job; it also lists zero-byte
+    # .nc files the scan skips, which only sizes the capped repartition
+    n_files = len(listing.inputFiles())
+    return decode_grid_slabs(
+        listing, n_files, bbox=bbox, variable=variable,
+        system_from_path=system_from_path, t_slice=t_slice,
+        open_dataset=open_dataset,
+    )
+
+
+#: The former name of :func:`read_wrf_grid`, bound for callers that
+#: still import it (the benchmark's ``perfbench/wrf.py``).
+read_wrf_grid_split = read_wrf_grid
+
+
+def decode_grid_slabs(
+    files: DataFrame,
+    n_files: int,
+    bbox: dict | None = None,
+    variable: str = "RAINNC",
+    system_from_path: bool = True,
+    t_slice: tuple[int, int] | None = None,
+    open_dataset=None,
+) -> DataFrame:
+    """Decode a ``(path, modificationTime)`` listing of ``n_files``
+    local ``.nc`` files into the long grid schema — the one decode
+    stage of :func:`read_wrf_grid` and the raw-``.nc`` stream
+    (``streaming/file_stream.stream_wrf_nc_push``).
+
+    Each file fans into :func:`_slabs_per_file` tasks, task *k*
+    decoding only the time slab ``[k*T/N, (k+1)*T/N)`` through the
+    codecs' lazy hyperslab path (chunked HDF5 inflates only the slab's
+    chunks; classic reads only the slab's records) from the mmap'd
+    file.  One task per file would pin one core and one Python worker
+    shipping every row of a big file; slabs move both the decode and
+    the Arrow transfer onto N workers.  No bytes pass through Spark."""
+    spark = files.sparkSession
     if n_files == 0:
         return spark.createDataFrame([], GRID_SCHEMA)
+    n_splits = _slabs_per_file(spark)
     od = open_dataset or _default_open_dataset()
-    ob = open_bytes or _local_file_buffer
     bbox = bbox or SL_EXTENT
-    # one task per (file, slab) — but capped: a 10k-file day at
-    # splits=32 must not plan 320k tasks (scheduler pressure for no
-    # gain; splitting exists for FEW big files / last stragglers,
-    # while many-file days already saturate on file parallelism).
-    # Under the cap each task decodes several slabs sequentially,
-    # which is exactly the one-task-per-file cost it replaces.
+    # one task per (file, slab) — but capped: a 10k-file day must not
+    # plan 320k tasks (scheduler pressure for no gain; many-file days
+    # already saturate on file parallelism).  Under the cap each task
+    # decodes several slabs sequentially, which is exactly the
+    # one-task-per-file cost it replaces.
     num_parts = min(
         n_files * n_splits,
         max(n_splits, 16 * spark.sparkContext.defaultParallelism),
     )
-    splits = listing.withColumn(
+    splits = files.withColumn(
         "split_id", F.explode(F.sequence(F.lit(0), F.lit(n_splits - 1)))
     ).repartition(num_parts)
 
+    # mapInArrow, not mapInPandas: the decode emits millions of rows
+    # per file, and pandas' block manager both consolidates (copies)
+    # the columns at construction and converts to Arrow again at the
+    # boundary — measured 3 s of pure overhead per 4.6M-cell d03
+    # file.  Arrow RecordBatches build zero-copy from the numpy
+    # columns the decode already has.
     def decode(batches):
         import pyarrow as pa
 
@@ -245,7 +246,7 @@ def read_wrf_grid_split(
             for i in range(b.num_rows):
                 p = paths[i].as_py()
                 k = sids[i].as_py()
-                content = ob(p)
+                content = _local_file_buffer(p)
                 try:
                     ds = od(content)
                     try:
@@ -276,60 +277,9 @@ def read_wrf_grid_split(
                     # of letting mmaps pile up until GC (every output
                     # column is a copy by construction; pinned by
                     # test_local_file_buffer_mmap_decodes equality)
-                    close = getattr(content, "close", None)
-                    if close is not None:
-                        close()
+                    content.close()
 
     return splits.mapInArrow(decode, schema=GRID_SCHEMA)
-
-
-def decode_grid_frame(
-    files: DataFrame,
-    bbox: dict | None = None,
-    variable: str = "RAINNC",
-    system_from_path: bool = True,
-    t_slice: tuple[int, int] | None = None,
-    open_dataset=None,
-) -> DataFrame:
-    """Decode a (path, modificationTime, content) binaryFile frame
-    into the long grid schema — the scan-independent stage of
-    :func:`read_wrf_grid`, shared with the raw-``.nc`` streaming
-    ingest (``streaming/file_stream.stream_wrf_nc_push``), so the
-    batch and streaming decode routes cannot drift."""
-    if open_dataset is None:
-        open_dataset = _default_open_dataset()
-
-    bbox = bbox or SL_EXTENT
-
-    # mapInArrow, not mapInPandas: the decode emits millions of rows
-    # per file, and pandas' block manager both consolidates (copies)
-    # the columns at construction and converts to Arrow again at the
-    # boundary — measured 3 s of pure overhead per 4.6M-cell d03
-    # file.  Arrow RecordBatches build zero-copy from the numpy
-    # columns the decode already has.
-    def decode(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            paths = b.column("path")
-            mtimes = b.column("modificationTime")
-            contents = b.column("content")
-            for i in range(b.num_rows):
-                yield from decode_grid_arrow(
-                    contents[i].as_py(),
-                    path=paths[i].as_py(),
-                    mtime=mtimes[i],
-                    bbox=bbox,
-                    variable=variable,
-                    t_slice=t_slice,
-                    system_from_path=system_from_path,
-                    open_dataset=open_dataset,
-                    pa=pa,
-                )
-
-    return files.select("path", "modificationTime", "content").mapInArrow(
-        decode, schema=GRID_SCHEMA
-    )
 
 
 def decode_grid_arrow(

@@ -27,7 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.config import WrfConfig
 from ..plans.wrf_push import persisted_push
-from ..sources.netcdf import decode_grid_frame
+from ..sources.netcdf import decode_grid_slabs
 
 
 def stream_wrf_nc_push(
@@ -43,8 +43,8 @@ def stream_wrf_nc_push(
     """The reference's WHOLE operational loop as one streaming job:
     watch ``watch_dir`` for RAW ``.nc`` file arrivals (the
     ``is_netcdf_ready.sh`` + cron pair, wrf_data_pusher.py:321-340),
-    decode each file's bytes with the pure-Python codecs and run the
-    E1 push into ``sink(fact, runs)``.
+    decode each file with the pure-Python codecs and run the E1 push
+    into ``sink(fact, runs)``.
 
     The source is the ``binaryFile`` format as a STREAMING file
     source — the checkpoint guarantees each .nc lands in exactly one
@@ -55,9 +55,10 @@ def stream_wrf_nc_push(
     no cap — is equally sound because files are only ever batched
     WHOLE (the series key includes ``source_file``, so lag windows
     never cross files) and lets a multi-system day decode its files
-    in parallel within one micro-batch (one decode task per file).
-    The decode is the SAME ``decode_grid_frame`` stage the batch
-    reader uses, so the routes cannot drift."""
+    in parallel within one micro-batch.  The stream carries only each
+    file's ``path`` and ``modificationTime`` (content pruned), and
+    every micro-batch decodes through the SAME ``decode_grid_slabs``
+    stage as the batch reader, so the routes cannot drift."""
     reader = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -69,15 +70,13 @@ def stream_wrf_nc_push(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(watch_dir)
+    stream = reader.load(watch_dir).select("path", "modificationTime")
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        n_files = batch_df.count()
+        if n_files == 0:
             return
-        grid = decode_grid_frame(
-            batch_df.select("path", "modificationTime", "content"),
-            bbox=bbox,
-        )
+        grid = decode_grid_slabs(batch_df, n_files, bbox=bbox)
         with persisted_push(grid, cfg) as (fact, runs):
             sink(fact, runs)
 

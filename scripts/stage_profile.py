@@ -40,13 +40,13 @@ def main() -> None:
     )
     bench._resolve("a1_pricing_summary")(spark, sf_dir).write.format(
         "noop").mode("overwrite").save()
-    fn = bench._resolve(args.name)
     spark.sparkContext.setJobDescription(args.name)
     for _ in range(args.reps):
         if args.name in bench.SINKS:
             bench.SINKS[args.name](spark, sf_dir)
         else:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            bench._resolve(args.name)(spark, sf_dir).write.format(
+                "noop").mode("overwrite").save()
     spark.sparkContext.setJobDescription(None)
     sc_log = spark.sparkContext
     sc_log._jsc.sc().listenerBus().waitUntilEmpty()

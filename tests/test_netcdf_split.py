@@ -1,17 +1,19 @@
-"""Intra-file parallel NetCDF ingest (read_wrf_grid_split) and the
-codec-level lazy hyperslab it rides on.
+"""The one NetCDF batch reader (read_wrf_grid) and the codec-level
+lazy hyperslab it rides on.
 
 The reference decodes each file in one process
-(wrf_data_pusher.py:143-279); the engine's baseline route keeps that
-shape (one task per file).  ``read_wrf_grid_split`` breaks the
-single-big-file / last-straggler bottleneck: N tasks per file, task k
-decoding time slab [k*T/N, (k+1)*T/N) through the SAME _grid_arrays
-core, with the codecs decoding O(slab) — chunked HDF5 inflates only
-intersecting chunks, classic reads only the slab's records.
+(wrf_data_pusher.py:143-279).  ``read_wrf_grid`` fans each file into N
+time-slab tasks, task k decoding slab [k*T/N, (k+1)*T/N) from the
+mmap'd file through the SAME _grid_arrays core, with the codecs
+decoding O(slab) — chunked HDF5 inflates only intersecting chunks,
+classic reads only the slab's records.  The reader is pinned against
+a driver-side reference: ``decode_grid_arrow`` over each file's whole
+bytes, no Spark.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
 import numpy as np
@@ -64,80 +66,148 @@ def grid_dir(request, tmp_path_factory):
     return str(base)
 
 
+_KEY_COLS = ("wrf_system", "source_file", "t_idx", "y", "x", "xtime_min",
+             "epoch_str")
+
+
+def _key(r: dict, fgt_ms: int) -> tuple:
+    return tuple(r[c] for c in _KEY_COLS) + (
+        round(r["latitude"], 6), round(r["longitude"], 6),
+        round(r["rainnc_cum"], 5), fgt_ms,
+    )
+
+
 def _collect_sorted(df):
-    rows = df.collect()
     return sorted(
-        (r.wrf_system, r.source_file, r.t_idx, r.y, r.x, r.xtime_min,
-         round(r.latitude, 6), round(r.longitude, 6),
-         round(r.rainnc_cum, 5), r.epoch_str, r.fgt_utc)
-        for r in rows
+        _key(r.asDict(), round(r.fgt_utc.timestamp() * 1000))
+        for r in df.collect()
     )
 
 
-def test_split_equals_unsplit(spark, grid_dir):
+def _reference(root, bbox=None, t_slice=None):
+    """Driver-side reference, no Spark: ``decode_grid_arrow`` over each
+    file's whole bytes, with the listing's ``file:`` URI and the
+    file's millisecond mtime (what the reader's listing carries)."""
+    import pyarrow as pa
+
     from curw_wrf_data_pusher_spark.sources.netcdf import (
-        read_wrf_grid,
-        read_wrf_grid_split,
+        SL_EXTENT,
+        _default_open_dataset,
+        decode_grid_arrow,
     )
 
-    base = read_wrf_grid(spark, grid_dir)
-    for n in (1, 3, 4):
-        split = read_wrf_grid_split(spark, grid_dir, splits_per_file=n)
-        assert _collect_sorted(split) == _collect_sorted(base), (
-            f"splits_per_file={n} diverged from the one-task route"
+    rows = []
+    for f in glob.glob(os.path.join(root, "**", "*.nc"), recursive=True):
+        ms = os.stat(f).st_mtime_ns // 1_000_000
+        with open(f, "rb") as fh:
+            content = fh.read()
+        batches = decode_grid_arrow(
+            content, path="file:" + f,
+            mtime=pa.scalar(ms * 1000, type=pa.timestamp("us")),
+            bbox=bbox or SL_EXTENT, variable="RAINNC", t_slice=t_slice,
+            system_from_path=True, open_dataset=_default_open_dataset(),
+            pa=pa,
         )
+        rows += [_key(r, ms) for b in batches for r in b.to_pylist()]
+    return sorted(rows)
 
 
-def test_split_more_tasks_than_timesteps(spark, grid_dir):
-    """splits > T: surplus slabs are empty, union still exact."""
-    from curw_wrf_data_pusher_spark.sources.netcdf import (
-        read_wrf_grid,
-        read_wrf_grid_split,
-    )
+@pytest.fixture
+def slabs(monkeypatch):
+    """Pin the reader's slab count per file."""
+    import curw_wrf_data_pusher_spark.sources.netcdf as ncmod
 
-    base = read_wrf_grid(spark, grid_dir)
-    split = read_wrf_grid_split(
-        spark, grid_dir, splits_per_file=T_N + 5
-    )
-    assert _collect_sorted(split) == _collect_sorted(base)
+    def pin(n):
+        monkeypatch.setattr(ncmod, "_slabs_per_file", lambda spark: n)
+
+    return pin
 
 
-def test_split_honours_t_slice_and_bbox(spark, grid_dir):
-    from curw_wrf_data_pusher_spark.sources.netcdf import (
-        read_wrf_grid,
-        read_wrf_grid_split,
-    )
+def test_split_equals_unsplit(spark, grid_dir, slabs):
+    """1, 2 and 3 slabs per file: the union equals the whole-file
+    driver-side decode."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
+
+    want = _reference(grid_dir)
+    assert want
+    for n in (1, 2, 3):
+        slabs(n)
+        got = _collect_sorted(read_wrf_grid(spark, grid_dir))
+        assert got == want, f"{n} slabs per file diverged"
+
+
+def test_split_more_tasks_than_timesteps(spark, grid_dir, slabs):
+    """slabs > T: surplus slabs are empty, union still exact."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
+
+    slabs(T_N + 5)
+    got = _collect_sorted(read_wrf_grid(spark, grid_dir))
+    assert got == _reference(grid_dir)
+
+
+def test_split_honours_t_slice_and_bbox(spark, grid_dir, slabs):
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
 
     bbox = {"lat_min": 6.5, "lat_max": 9.0,
             "lon_min": 79.9, "lon_max": 81.5}
-    base = read_wrf_grid(spark, grid_dir, bbox=bbox, t_slice=(1, 4))
-    split = read_wrf_grid_split(
-        spark, grid_dir, bbox=bbox, t_slice=(1, 4), splits_per_file=3
+    slabs(3)
+    got = _collect_sorted(
+        read_wrf_grid(spark, grid_dir, bbox=bbox, t_slice=(1, 4))
     )
-    got = _collect_sorted(split)
-    assert got == _collect_sorted(base)
+    assert got == _reference(grid_dir, bbox=bbox, t_slice=(1, 4))
     assert got, "t-sliced bbox read must not be empty"
     assert {r[2] for r in got} == {1, 2, 3}  # t_idx stays absolute
+
+
+def test_split_task_cap_engages_and_stays_exact(spark, grid_dir, slabs):
+    """Above the 16x-defaultParallelism partition cap, several
+    (file, slab) pairs share a task — the union must stay exact and
+    the plan must not exceed the cap."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
+
+    cap = 16 * spark.sparkContext.defaultParallelism
+    slabs(cap)  # 2 files x cap slabs = 2x the cap -> cap engages
+    split = read_wrf_grid(spark, grid_dir)
+    assert split.rdd.getNumPartitions() == cap
+    assert _collect_sorted(split) == _reference(grid_dir)
+
+
+def test_reader_call_launches_no_job(spark, grid_dir):
+    """Calling the reader plans only: the file count comes from the
+    file index, not a Spark job."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"reader_call {grid_dir}"  # own group per fixture param
+    sc.setJobGroup(group, "read_wrf_grid call")
+    try:
+        df = read_wrf_grid(spark, grid_dir)
+        assert tracker.getJobIdsForGroup(group) == []
+        assert df.count() > 0
+        # the group does see jobs: the empty list above is not vacuous
+        assert tracker.getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_split_empty_dir_returns_empty_grid_schema(spark, tmp_path):
     from curw_wrf_data_pusher_spark.sources.netcdf import (
         GRID_SCHEMA,
-        read_wrf_grid_split,
+        read_wrf_grid,
     )
 
-    df = read_wrf_grid_split(spark, str(tmp_path), splits_per_file=4)
+    df = read_wrf_grid(spark, str(tmp_path))
     assert df.count() == 0
     assert df.schema == spark.createDataFrame([], GRID_SCHEMA).schema
 
 
-def test_split_rejects_remote_path_without_open_bytes():
-    from curw_wrf_data_pusher_spark.sources.netcdf import (
-        _local_file_buffer,
-    )
+def test_split_rejects_remote_path(spark):
+    """Non-local paths fail on the driver, before any listing."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
 
-    with pytest.raises(ValueError, match="open_bytes"):
-        _local_file_buffer("hdfs://nameservice/f.nc")
+    with pytest.raises(ValueError, match="local files only"):
+        read_wrf_grid(spark, "hdfs://nameservice/wrf")
 
 
 def test_local_file_buffer_mmap_decodes(tmp_path):
@@ -281,22 +351,3 @@ def test_decode_grid_arrow_caps_batch_rows(tmp_path, monkeypatch):
     got = pa.Table.from_batches(capped)
     want = pa.Table.from_batches(whole)
     assert got.equals(want)
-
-
-def test_split_task_cap_engages_and_stays_exact(spark, grid_dir):
-    """Above the 16x-defaultParallelism partition cap, several
-    (file, slab) pairs share a task — the union must stay exact and
-    the plan must not exceed the cap."""
-    from curw_wrf_data_pusher_spark.sources.netcdf import (
-        read_wrf_grid,
-        read_wrf_grid_split,
-    )
-
-    cap = 16 * spark.sparkContext.defaultParallelism
-    n_splits = cap  # 2 files x cap splits = 2x the cap -> cap engages
-    split = read_wrf_grid_split(
-        spark, grid_dir, splits_per_file=n_splits
-    )
-    assert split.rdd.getNumPartitions() == cap
-    base = read_wrf_grid(spark, grid_dir)
-    assert _collect_sorted(split) == _collect_sorted(base)

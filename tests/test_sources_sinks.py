@@ -251,10 +251,10 @@ def test_write_rfield_files_evaluates_input_once(spark, tmp_path):
 
 
 def test_runner_empty_push_leaves_run_dim_untouched(spark, tmp_path):
-    """A4: an empty grid (what the split reader returns for an empty
+    """A4: an empty grid (what the reader returns for an empty
     watch dir) is a failed push step, and it must not stage and
     rename the existing run dim to merge zero rows."""
-    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid_split
+    from curw_wrf_data_pusher_spark.sources.netcdf import read_wrf_grid
 
     store = str(tmp_path / "store")
     assert run_wrf_push(spark, CFG, _fixture_grid(spark), store).ok
@@ -269,7 +269,7 @@ def test_runner_empty_push_leaves_run_dim_untouched(spark, tmp_path):
     before = listing()
     empty_dir = tmp_path / "watch"
     empty_dir.mkdir()
-    empty = read_wrf_grid_split(spark, str(empty_dir))
+    empty = read_wrf_grid(spark, str(empty_dir))
     assert empty.isEmpty()
     report = run_wrf_push(spark, CFG, empty, store)
     assert not report.ok

@@ -2,11 +2,13 @@
 touched-partition predicate's expression DEPTH (the round-13
 stream_gauge_qc 100x probe found the old left-fold OR chain
 overflowing the JVM stack when a store-bootstrapping batch touched
-10,000 hash_id partitions).  The merge semantics themselves are
-pinned in tests/test_sources_sinks.py and tests/test_streaming.py."""
+10,000 hash_id partitions), and the first write's in-plan row count.
+The merge semantics themselves are pinned in
+tests/test_sources_sinks.py and tests/test_streaming.py."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
 
@@ -43,3 +45,36 @@ def test_touched_predicate_shallow_at_10k_partitions(spark):
     assert df.filter(
         _touched_predicate(["hash_id", "batch"], touched3)
     ).count() == 0
+
+
+@pytest.mark.parametrize("partition_cols", [["d"], None])
+def test_first_write_reads_nothing_back(spark, tmp_path, monkeypatch,
+                                        partition_cols):
+    """A fresh store's row count is observed in the write's plan: the
+    first write opens no parquet (the missing-store probe raises
+    before it returns a frame) and returns the rows it wrote."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+
+    df = spark.createDataFrame(
+        [(i, f"d{i % 3}", float(i)) for i in range(50)],
+        "k long, d string, v double",
+    )
+    opened = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        out = real(self, *paths, **kw)
+        opened.append(paths)
+        return out
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    store = str(tmp_path / "store")
+    n = upsert_parquet(
+        spark, df, store, keys=["k"], partition_cols=partition_cols
+    )
+    assert n == 50
+    assert opened == []
+    monkeypatch.undo()
+    assert spark.read.parquet(store).count() == 50
