@@ -18,7 +18,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.upsert import upsert_parquet
+from ..sinks.upsert import staged_upsert, upsert_parquet
 from .config import WrfConfig
 from .rfields import build_rfields
 from .wrf_push import persisted_push
@@ -63,12 +63,25 @@ def run_wrf_push(
     Both upserts read one cached copy of the frame ``fact`` and ``runs``
     share (``persisted_push``: decoded, lag-diffed, ``tms_id``-keyed);
     the first action fills it, and it is released when the push step
-    ends, whether the step succeeds, finds the grid empty or fails."""
+    ends, whether the step succeeds, finds the grid empty or fails.
+
+    Ordering rule (the reference's K1 → K2/K3, wrf_data_pusher.py:103-140,
+    :239-260): the fact merge commits first, then the run dim is
+    published.  The run-dim merge does not need the fact merge's output,
+    so it is staged on one worker thread beside it (``staged_upsert``),
+    and only its publish waits for the fact commit.  A failed fact merge
+    or an empty push discards the staged run dim, leaving it exactly as
+    it was; the thread is joined before the cache is released."""
     report = RunReport()
     if systems is not None:
         grid = grid.filter(F.col("wrf_system").isin(list(systems)))
     try:
-        with persisted_push(grid, cfg, stations=stations) as (fact, runs):
+        with (
+            persisted_push(grid, cfg, stations=stations) as (fact, runs),
+            staged_upsert(
+                spark, runs, os.path.join(store_dir, "run"), keys=["tms_id"]
+            ) as publish_runs,
+        ):
             # Partition the fact store by the date prefix of `time`: a
             # pure function of the (tms_id, time) key, so the
             # partition-scoped merge is sound — each daily push touches
@@ -82,14 +95,12 @@ def run_wrf_push(
             )
             # A4 emptiness guard: the reference aborts with "timeseries
             # is empty" (wrf_data_pusher.py:200-204) — an empty push is
-            # a failed step, not a silent success, and it must not
-            # rewrite the run dim to merge zero rows
+            # a failed step, not a silent success, and the run dim must
+            # not be swapped for a merge of zero rows
             if n_fact == 0:
                 report.record("push", False, detail="timeseries is empty")
                 return report
-            n_runs = upsert_parquet(
-                spark, runs, os.path.join(store_dir, "run"), keys=["tms_id"]
-            )
+            n_runs = publish_runs()
         report.record("push", True, rows=n_fact, series=n_runs)
     except Exception as exc:
         report.record("push", False, detail=f"{type(exc).__name__}: {exc}")

@@ -65,20 +65,48 @@ def _ship_package(spark: SparkSession) -> None:
     worker side; on a real cluster — or a driver launched from a CWD
     outside the repo — the package isn't on the workers' sys.path.
     A zip added once per session fixes both."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmpdir = spark._jvm.System.getProperty("java.io.tmpdir") or "/tmp"
+    spark.sparkContext.addPyFile(
+        package_zip(os.path.join(root, "curw_wrf_data_pusher_spark"), tmpdir)
+    )
+
+
+def package_zip(pkg: str, out_dir: str) -> str:
+    """Zip of the ``.py`` files under ``pkg`` (paths relative to its
+    parent), named by a hash of their paths and bytes: one tree's code
+    is one file, reused by every session that ships it, and a zip never
+    holds another tree's code.  Written to a temporary name and renamed
+    into place, so a concurrent reader sees no partial zip."""
+    import hashlib
+    import tempfile
     import zipfile
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(root, "curw_wrf_data_pusher_spark")
+    root = os.path.dirname(pkg)
+    members = []
+    for dirpath, dirnames, names in os.walk(pkg):
+        dirnames.sort()
+        for name in sorted(names):
+            if name.endswith(".py"):
+                full = os.path.join(dirpath, name)
+                with open(full, "rb") as f:
+                    members.append((os.path.relpath(full, root), f.read()))
+    digest = hashlib.sha256()
+    for rel, data in members:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
     zip_path = os.path.join(
-        spark._jvm.System.getProperty("java.io.tmpdir") or "/tmp",
-        f"curw_wrf_data_pusher_spark-{os.getpid()}.zip",
+        out_dir, f"{os.path.basename(pkg)}-{digest.hexdigest()[:16]}.zip"
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for dirpath, _, names in os.walk(pkg):
-                for name in names:
-                    if not name.endswith(".py"):
-                        continue
-                    full = os.path.join(dirpath, name)
-                    zf.write(full, os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(zip_path)
+    if os.path.exists(zip_path):
+        return zip_path
+    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".zip.tmp")
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for rel, data in members:
+                zf.writestr(rel, data)
+        os.replace(tmp, zip_path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return zip_path

@@ -13,6 +13,8 @@ Two sinks:
   as the scale path when the store is the lake itself (at 100 TB the
   anti-join is partition-pruned by the key's partition columns).  Each
   merge is written once and its row count observed in the write's plan.
+  ``staged_upsert`` is its full-store form split around a caller's
+  block: staged beside it, published only when the block says so.
 - ``upsert_jdbc``: ``foreachPartition`` batched MySQL upsert with retry,
   matching the reference's sink exactly.  Import-gated (no MySQL driver
   or server in this container); the SQL builder is pure and unit-tested.
@@ -22,8 +24,11 @@ from __future__ import annotations
 
 import functools
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import contextmanager
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,17 +72,19 @@ def upsert_parquet(
       one partition) — true for the reference's layout where fgt/date
       derive from the series key + run (SURVEY §1.4,
       wrf_data_pusher.py:119-140).
-    - no ``partition_cols``: full-store merge.  The merged result is
-      staged to ``<path>.staging`` and swapped in by filesystem RENAME
+    - no ``partition_cols``, or a store that is missing or not yet laid
+      out by them: full-store merge in two steps.  *Stage* writes the
+      merged result (``new_rows`` alone when there is no store yet) to
+      ``<path>.staging``; *publish* swaps it in by filesystem RENAME
       (store → .old, staging → store, delete .old), so a failure at any
       point leaves either the old or the new store fully intact — never
       the half-deleted state a second overwrite-write would risk (a
       failed staging write deletes its partial copy).
+      :func:`staged_upsert` runs the same two steps with the stage on a
+      worker thread, so a caller can publish one store only after its
+      write to another has committed (E1: fact commit, then run-dim
+      publish).
     """
-    from pyspark.errors import AnalysisException
-
-    from ..functions.errors import is_missing_input
-
     # The scoped merge is only sound when the store really is laid out
     # as <col>=<value> directories for these columns: against a flat
     # store the touched-partition filter would match nothing, the
@@ -91,53 +98,133 @@ def upsert_parquet(
         return _upsert_partitioned(
             spark, new_rows, store_path, keys, list(partition_cols)
         )
+    written = _stage(spark, new_rows, store_path, keys, partition_cols)
+    _publish(spark, store_path)
+    return written
 
+
+@contextmanager
+def staged_upsert(
+    spark: SparkSession,
+    new_rows: DataFrame,
+    store_path: str,
+    keys: Sequence[str],
+) -> Iterator[Callable[[], int]]:
+    """The full-store :func:`upsert_parquet`, run beside the caller's
+    block: the merge is staged on one worker thread while the block
+    runs, and the store changes only when the block calls the yielded
+    ``publish()``, which waits for the stage, swaps it in and returns
+    the rows written (re-raising a failed stage).
+
+    On exit the thread is always joined — no job of it outlives the
+    block, so a cache the caller releases afterwards is not re-filled —
+    and a staging the block did not publish (it returned early or
+    raised) is deleted: the store is then exactly as it was.  The thread
+    carries the caller's Spark local properties (job group, scheduler
+    pool, description), so its jobs are attributed like the caller's."""
+    publishing = False
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        staged = pool.submit(
+            inheritable_thread_target(spark)(_stage),
+            spark, new_rows, store_path, keys,
+        )
+
+        def publish() -> int:
+            nonlocal publishing
+            written = staged.result()
+            publishing = True
+            _publish(spark, store_path)
+            return written
+
+        try:
+            yield publish
+        finally:
+            wait([staged])
+            if not publishing:
+                _discard(spark, store_path)
+
+
+def _read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """The store's rows, or None when there is no store yet: a missing
+    path, or a directory without data files.  A missing path is checked
+    on the filesystem first; reading it would run a failed query that
+    every ``Observation`` listener of the session logs as an error."""
+    from pyspark.errors import AnalysisException
+
+    from ..functions.errors import is_missing_input
+
+    fs, path, _ = _hadoop_fs(spark, store_path)
+    if not fs.exists(path):
+        return None
     try:
-        existing = spark.read.parquet(store_path)
+        return spark.read.parquet(store_path)
     except AnalysisException as exc:
-        # ONLY "no store yet" (missing/empty path) may start a fresh
-        # store; a transient read failure on an EXISTING store must
-        # propagate — swallowing it would write `new_rows` alone over
-        # months of history (the swallow-everything anti-pattern
+        # ONLY "no store yet" (empty or just-deleted path) may start a
+        # fresh store; a transient read failure on an EXISTING store
+        # must propagate — swallowing it would write `new_rows` alone
+        # over months of history (the swallow-everything anti-pattern
         # functions/errors.py exists to eliminate)
         if not is_missing_input(exc, allow_empty=True):
             raise
-        # First-write fast path: a fresh store has nothing to merge
-        # and nothing to lose to a non-atomic write — write the batch
-        # directly and skip the staging+rename roundtrip (at 10k
-        # partitions the round-13 gauge-QC probe measured each extra
-        # partitioned write as minutes of commit metadata).
-        counted, written = _observe_rows(new_rows)
-        writer = counted.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(store_path)
-        return written()
+        return None
 
-    kept = existing.join(
-        new_rows.select(*keys),
-        on=list(keys),
-        how="left_anti",
-    )
-    merged, written = _observe_rows(kept.unionByName(new_rows))
-    staging = store_path.rstrip("/") + ".staging"
-    fs, store_p, jvm = _hadoop_fs(spark, store_path)
-    staging_p = jvm.org.apache.hadoop.fs.Path(staging)
-    old_p = jvm.org.apache.hadoop.fs.Path(store_path.rstrip("/") + ".old")
-    writer = merged.write.mode("overwrite")
+
+def _swap_paths(spark: SparkSession, store_path: str):
+    """The store's filesystem and the Hadoop paths of the store, of its
+    staged successor ``<store>.staging`` and of ``<store>.old``, where
+    the publish moves it aside."""
+    fs, store, jvm = _hadoop_fs(spark, store_path)
+    base = store_path.rstrip("/")
+    path = jvm.org.apache.hadoop.fs.Path
+    return fs, store, path(base + ".staging"), path(base + ".old")
+
+
+def _stage(
+    spark: SparkSession,
+    new_rows: DataFrame,
+    store_path: str,
+    keys: Sequence[str],
+    partition_cols: Sequence[str] | None = None,
+) -> int:
+    """Write the full-store merge of ``new_rows`` to ``<store>.staging``
+    and return the rows written.  The store itself is only read."""
+    existing = _read_store(spark, store_path)
+    merged = new_rows
+    if existing is not None:
+        kept = existing.join(
+            new_rows.select(*keys),
+            on=list(keys),
+            how="left_anti",
+        )
+        merged = kept.unionByName(new_rows)
+    counted, written = _observe_rows(merged)
+    fs, _, staging, _ = _swap_paths(spark, store_path)
+    writer = counted.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     try:
-        writer.parquet(staging)
+        writer.parquet(staging.toString())
     except BaseException:
-        fs.delete(staging_p, True)
+        fs.delete(staging, True)
         raise
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    fs.rename(store_p, old_p)
-    fs.rename(staging_p, store_p)
-    fs.delete(old_p, True)
     return written()
+
+
+def _publish(spark: SparkSession, store_path: str) -> None:
+    """Swap ``<store>.staging`` in by rename; a first write has no store
+    to move aside."""
+    fs, store, staging, old = _swap_paths(spark, store_path)
+    if fs.exists(old):
+        fs.delete(old, True)
+    if fs.exists(store):
+        fs.rename(store, old)
+    fs.rename(staging, store)
+    fs.delete(old, True)
+
+
+def _discard(spark: SparkSession, store_path: str) -> None:
+    fs, _, staging, _ = _swap_paths(spark, store_path)
+    fs.delete(staging, True)
 
 
 def _observe_rows(df: DataFrame):
@@ -239,9 +326,9 @@ def _upsert_partitioned(
     # count is the number of distinct partition tuples in one push —
     # dims-scale at worst (a store-bootstrapping batch touches every
     # series of a 10^4-gauge network), never fact-scale.
-    # (The first-write fast path lives in upsert_parquet's fresh-store
-    # branch: this function is only entered when the store exists AND
-    # _store_is_partitioned_by saw <col>= data directories.)
+    # (A fresh store takes the full-store route: this function is only
+    # entered when the store exists AND _store_is_partitioned_by saw
+    # <col>= data directories.)
     touched = new_rows.select(*partition_cols).distinct().collect()
     if not touched:
         return 0

@@ -240,7 +240,7 @@ def main() -> None:
     from curw_wrf_data_pusher_spark.sinks.rfield_files import (
         write_rfield_files,
     )
-    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+    from curw_wrf_data_pusher_spark.sinks.upsert import staged_upsert
     from curw_wrf_data_pusher_spark.sources.lake import spread
     from curw_wrf_data_pusher_spark.sources.netcdf import (
         KELANI_EXTENT,
@@ -326,23 +326,27 @@ def main() -> None:
 
     def sink(fact, runs):
         batch = f"b{state['batches']:08d}"
-        if not state["created"]:
-            create_fact_store(
-                spark, fact, fact_table, num_buckets=BUCKETS,
-                path=os.path.join(store_dir, "fact"), batch=batch,
-            )
-            state["created"] = True
-        else:
-            append_fact_rows(spark, fact_table, fact, batch=batch)
         # runs is dim-scale (one row per series) but its lineage is the
         # fact-scale grid agg — pin it so the J5 mint's branches and
-        # the upsert don't each re-aggregate 18.5M rows
+        # the upsert don't each re-aggregate 18.5M rows.  Station ids
+        # are minted first, as the reference gets-or-creates stations
+        # before it inserts their data; the run-dim merge is staged
+        # beside the fact write and published only after it commits.
         runs = runs.persist()
         try:
-            upsert_parquet(
+            with staged_upsert(
                 spark, mint_station_ids(runs),
                 os.path.join(store_dir, "run"), keys=["tms_id"],
-            )
+            ) as publish_runs:
+                if not state["created"]:
+                    create_fact_store(
+                        spark, fact, fact_table, num_buckets=BUCKETS,
+                        path=os.path.join(store_dir, "fact"), batch=batch,
+                    )
+                    state["created"] = True
+                else:
+                    append_fact_rows(spark, fact_table, fact, batch=batch)
+                publish_runs()
         finally:
             runs.unpersist()
         state["batches"] += 1

@@ -275,6 +275,74 @@ def test_runner_empty_push_leaves_run_dim_untouched(spark, tmp_path):
     assert not report.ok
     assert report.steps[0]["detail"] == "timeseries is empty"
     assert listing() == before
+    assert not os.path.exists(run_dir + ".staging")
+
+
+def test_runner_failed_fact_merge_leaves_run_dim_untouched(
+    spark, tmp_path, monkeypatch
+):
+    """The run dim is published only after the fact merge commits.  A
+    fact merge that fails while the run-dim stage runs leaves the run
+    dim byte-identical with no staging beside it and the failure in the
+    report, and no job of the stage is still running on return."""
+    import threading
+
+    from curw_wrf_data_pusher_spark.plans import runner
+    from curw_wrf_data_pusher_spark.sinks import upsert
+
+    store = str(tmp_path / "store")
+    assert run_wrf_push(spark, CFG, _fixture_grid(spark), store).ok
+    run_dir = os.path.join(store, "run")
+    before = _partition_state(run_dir)
+    started, finished = threading.Event(), threading.Event()
+    real_stage = upsert._stage
+
+    def stage(*args, **kwargs):
+        started.set()
+        try:
+            return real_stage(*args, **kwargs)
+        finally:
+            finished.set()
+
+    def failing_fact_merge(*args, **kwargs):
+        assert started.wait(60)
+        raise RuntimeError("fact merge failed")
+
+    monkeypatch.setattr(upsert, "_stage", stage)
+    monkeypatch.setattr(runner, "upsert_parquet", failing_fact_merge)
+    report = run_wrf_push(spark, CFG, _fixture_grid(spark), store)
+    assert finished.is_set()  # the stage thread was joined
+    assert not report.ok
+    assert report.steps[0]["detail"] == "RuntimeError: fact merge failed"
+    assert _partition_state(run_dir) == before
+    assert not os.path.exists(run_dir + ".staging")
+    assert not os.path.exists(run_dir + ".old")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert _cache_is_empty(spark)
+
+
+def test_runner_jobs_carry_callers_job_group(spark, tmp_path):
+    """Every job of a push, the run-dim stage on its worker thread
+    included, runs in the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    store = str(tmp_path / "store")
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("g", "wrf push")
+    try:
+        # a fresh store, then a merge onto it: both sink routes
+        reports = [run_wrf_push(spark, CFG, _fixture_grid(spark), store)
+                   for _ in range(2)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert all(r.ok for r in reports), [r.steps for r in reports]
+    assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+    assert tracker.getJobIdsForGroup("g")
 
 
 def test_runner_seq_variant_single_system(spark, tmp_path):

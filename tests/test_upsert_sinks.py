@@ -51,8 +51,8 @@ def test_touched_predicate_shallow_at_10k_partitions(spark):
 def test_first_write_reads_nothing_back(spark, tmp_path, monkeypatch,
                                         partition_cols):
     """A fresh store's row count is observed in the write's plan: the
-    first write opens no parquet (the missing-store probe raises
-    before it returns a frame) and returns the rows it wrote."""
+    first write opens no parquet (a missing store is found on the
+    filesystem, not by a failed read) and returns the rows it wrote."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
@@ -65,9 +65,8 @@ def test_first_write_reads_nothing_back(spark, tmp_path, monkeypatch,
     real = DataFrameReader.parquet
 
     def spy(self, *paths, **kw):
-        out = real(self, *paths, **kw)
         opened.append(paths)
-        return out
+        return real(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     store = str(tmp_path / "store")
@@ -78,3 +77,19 @@ def test_first_write_reads_nothing_back(spark, tmp_path, monkeypatch,
     assert opened == []
     monkeypatch.undo()
     assert spark.read.parquet(store).count() == 50
+
+
+def test_empty_store_dir_starts_fresh(spark, tmp_path):
+    """An existing directory without data files is no store yet: the
+    upsert writes the batch alone and swaps it in."""
+    import os
+
+    from curw_wrf_data_pusher_spark.sinks.upsert import upsert_parquet
+
+    store = tmp_path / "store"
+    store.mkdir()
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double")
+    assert upsert_parquet(spark, df, str(store), keys=["k"]) == 2
+    assert sorted(spark.read.parquet(str(store)).collect()) == sorted(
+        df.collect())
+    assert not os.path.exists(str(store) + ".staging")
